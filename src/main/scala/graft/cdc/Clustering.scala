@@ -32,10 +32,7 @@ object Clustering {
 
   // ONE per-path FS resolution (DeltaProtocol.fsOf): the default-FS
   // instance breaks when the table dir lives on a different filesystem
-  private def fsOf(spark: SparkSession, dir: String) =
-    graft.ops.DeltaProtocol.fsOf(spark, dir)
-
-  private def path(s: String) = new org.apache.hadoop.fs.Path(s)
+  import graft.ops.DeltaProtocol.{fsOf, path}
 
   /** Z-order (Morton) interleave of two non-negative integer columns,
     * `bits` low bits each: bit i of `a` lands at position 2i+1, bit i of

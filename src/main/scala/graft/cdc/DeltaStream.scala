@@ -71,7 +71,11 @@ object DeltaStream {
   /** Warehouse root the table(s) land under (and the synced catalog's root). */
   val TargetPath = "graft.target.path"
   /** Topic directory of Kafka-shaped newline-JSON segments (S1's
-    * file-emulated source — the one seam a production Kafka port touches). */
+    * file-emulated source — the one seam a production Kafka port touches).
+    * Producer contract: segments are read in file-mtime order (ms), the
+    * role offsets play on a real topic, so each segment must land with a
+    * strictly later mtime than the one before it — see
+    * [[Ingest.readTopicStream]] for why equal mtimes can lose deletes. */
   val SourceDir = "graft.source.dir"
   /** Structured Streaming checkpoint location. The file-group store's
     * own `_STREAM_BATCH_` markers make replays exactly-once even if

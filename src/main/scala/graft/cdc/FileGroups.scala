@@ -64,8 +64,7 @@ object FileGroups {
 
   // ONE per-path FS resolution (DeltaProtocol.fsOf): the default-FS
   // instance breaks when the table dir lives on a different filesystem
-  private def fsOf(spark: SparkSession, dir: String) =
-    graft.ops.DeltaProtocol.fsOf(spark, dir)
+  import graft.ops.DeltaProtocol.{fsOf, path}
 
   /** Per-table commit lock (keyed by table dir): makes the
     * head-check → merge → manifest → marker sequence ATOMIC for
@@ -88,8 +87,6 @@ object FileGroups {
     * so locked services may call each other. */
   private[cdc] def withTableLock[T](dir: String)(f: => T): T =
     lockFor(dir).synchronized(f)
-
-  private def path(s: String) = new org.apache.hadoop.fs.Path(s)
 
   /** bucket of a key tuple: non-negative hash mod nBuckets. xxhash64 is
     * Spark-codegen'd and stable across sessions — the index must hash

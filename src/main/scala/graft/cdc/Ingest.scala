@@ -28,7 +28,16 @@ object Ingest extends org.apache.spark.internal.Logging {
     * rows. `subscribePattern` filtering (README.md:193) is the rlike.
     * `valueBase64 = true` for Avro-valued topics: the file transport
     * carries binary values base64-encoded, and unbase64 restores the
-    * exact bytes a real Kafka record would deliver (S15 wire format). */
+    * exact bytes a real Kafka record would deliver (S15 wire format).
+    *
+    * Ordering hazard: with one file per trigger, the file source orders
+    * segments by modification time in ms, so two segments with EQUAL
+    * mtimes can be read in either order. Deletes leave no tombstone in
+    * the table (the [[CdcMerge.snapshot]] drop), so a stale insert read
+    * after its delete silently resurrects the key. Producers must give
+    * each segment a strictly later mtime than the one before it
+    * (perfbench's `Gen.land` does); the real fix, tombstones or a
+    * name-ordered source, is not implemented. */
   def readTopicStream(spark: SparkSession, dir: String, topicPattern: String = "debezium1.*",
                       valueBase64: Boolean = false): DataFrame = {
     val raw = StructType.fromDDL(
@@ -231,8 +240,7 @@ object Ingest extends org.apache.spark.internal.Logging {
 
   // ONE per-path FS resolution (DeltaProtocol.fsOf): the default-FS
   // instance breaks when the table dir lives on a different filesystem
-  private def fsOf(spark: SparkSession, dir: String) =
-    graft.ops.DeltaProtocol.fsOf(spark, dir)
+  import graft.ops.DeltaProtocol.fsOf
 
   /** Highest committed batch id under `dir`, if any. */
   def committedBatch(spark: SparkSession, dir: String): Option[Long] = {

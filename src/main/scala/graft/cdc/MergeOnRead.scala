@@ -37,10 +37,7 @@ object MergeOnRead {
 
   // ONE per-path FS resolution (DeltaProtocol.fsOf): the default-FS
   // instance breaks when the table dir lives on a different filesystem
-  private def fsOf(spark: SparkSession, dir: String) =
-    graft.ops.DeltaProtocol.fsOf(spark, dir)
-
-  private def path(s: String) = new org.apache.hadoop.fs.Path(s)
+  import graft.ops.DeltaProtocol.{fsOf, path}
 
   /** Batch ids of committed (marker present) pending log deltas — the
     * same `_DELTA_<id>` marker scan as the persisted ops indexes, ONE

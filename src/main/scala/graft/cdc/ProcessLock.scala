@@ -102,8 +102,7 @@ object ProcessLock {
   private[cdc] case object Stolen extends ReleaseOutcome
   private[cdc] case object Absent extends ReleaseOutcome
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    graft.ops.DeltaProtocol.fsOf(spark, dir)
+  import graft.ops.DeltaProtocol.fsOf
 
   private def lockPath(dir: String) = new Path(s"$dir/_LOCK")
   private def stealMutexPath(dir: String) = new Path(s"$dir/_LOCK.steal")

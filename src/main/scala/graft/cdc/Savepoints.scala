@@ -27,10 +27,7 @@ object Savepoints {
 
   // ONE per-path FS resolution (DeltaProtocol.fsOf): the default-FS
   // instance breaks when the table dir lives on a different filesystem
-  private def fsOf(spark: SparkSession, dir: String) =
-    graft.ops.DeltaProtocol.fsOf(spark, dir)
-
-  private def path(s: String) = new org.apache.hadoop.fs.Path(s)
+  import graft.ops.DeltaProtocol.{fsOf, path}
 
   /** Ids currently pinned by a savepoint marker. */
   def savepoints(spark: SparkSession, dir: String): Set[Long] = {

@@ -2,18 +2,13 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Persisted count-min sketch — the mergeable FREQUENCY sketch as a
   * maintained table-service artifact (the [[LshIndex]]/[[IvfPqIndex]]
   * sibling for approximate term counting). CMS cells are plain integer
-  * counts and sketch UNION is cell-wise addition, so the streaming
-  * maintenance story is trivial by construction: each micro-batch
-  * appends its own partial sketch (d×w cells at most, computed with one
-  * map-side-combined aggregation over the batch) as a delta, and the
-  * served sketch is the cell-wise SUM over all live deltas — never a
-  * rescan of landed data. Per-batch cost ∝ batch tokens; serve cost ∝
-  * deltas × d·w cells (compact() collapses them back to one).
+  * counts and sketch UNION is cell-wise addition, so the served sketch
+  * is the cell-wise SUM over all live deltas. A delta is ≤ d×w cells,
+  * computed with one map-side-combined aggregation over the batch.
   *
   * Estimates are one-sided (est ≥ true count, always — the min over d
   * independent md5-derived hash rows can only overcount from
@@ -22,19 +17,26 @@ import org.apache.spark.sql.types.StructType
   * (q_heavy_hitters_cms is the single-query form; stream_cms_e2e runs
   * this store through the checkpointed ingest loop).
   *
-  * Layout under `dir`:
+  * Layout under `dir` (the [[MergeableStore]] rules):
   * {{{
   *   cells_d<id>/   (r, b, n) partial sketch of batch <id>
-  *   _DELTA_<id>    append marker (written last; content `empty` for a
-  *                  token-less batch)
-  *   _INDEX         base marker, carries "d=<d>,w=<w>" — the sketch
-  *                  geometry is pinned at build; a different (d, w)
-  *                  would make old and new cells incomparable
+  *   _INDEX         carries "d=<d>,w=<w>" — the sketch geometry is
+  *                  pinned at build; a different (d, w) would make old
+  *                  and new cells incomparable
   * }}}
   */
-object CmsSketch {
+object CmsSketch extends MergeableStore[(Int, Int)] {
 
-  import DeltaProtocol.{fsOf, path}
+  protected val name = "CMS sketch"
+  protected val dataPrefix = "cells_d"
+  protected val deltaSchema = "r INT, b BIGINT, n BIGINT"
+  protected val parse: PartialFunction[String, (Int, Int)] = {
+    case s"d=$d,w=$w" => (d.toInt, w.toInt)
+  }
+  protected def partial(terms: DataFrame, p: (Int, Int)): DataFrame =
+    partialSketch(terms, p._1, p._2)
+  protected def merge(deltas: DataFrame, p: => (Int, Int)): DataFrame =
+    deltas.groupBy(col("r"), col("b")).agg(sum(col("n")).as("n"))
 
   /** Hash row `r`'s bucket for `term`: md5-derived 48-bit hash of the
     * row-salted term, mod `w`. Engine-portable (the q_* oracle rule). */
@@ -50,84 +52,17 @@ object CmsSketch {
       .withColumn("b", bucket(col("r"), col("term"), w))
       .groupBy(col("r"), col("b")).agg(count(lit(1)).as("n"))
 
-  def exists(spark: SparkSession, dir: String): Boolean =
-    DeltaProtocol.markerExists(spark, dir)
-
-  /** Initialize an empty sketch with pinned geometry — the streaming
-    * bootstrap: every batch (including the first) then enters through
-    * the append path, so the delta replay rules apply uniformly. */
+  /** Initialize an empty sketch with pinned geometry. */
   def buildEmpty(spark: SparkSession, dir: String, d: Int = 4, w: Int = 512): Unit =
-    DeltaProtocol.resetStore(spark, dir, "cells_d", "cells_compact_tmp", s"d=$d,w=$w")
-
-  /** Complete a crashed compact, if any — idempotent; [[append]] and
-    * [[compact]] run it first, and the streaming wrapper
-    * ([[graft.streaming.Streams.cmsBatch]]) runs it BEFORE its
-    * existence check: mid-compact the `_INDEX` marker is down, and an
-    * exists-first caller would wedge permanently on a store the
-    * protocol promises to heal. */
-  def recover(spark: SparkSession, dir: String): Unit =
-    DeltaProtocol.finishCompact(spark, dir, "cells_d", "cells_compact_tmp")
+    reset(spark, dir, s"d=$d,w=$w")
 
   /** Pinned (d, w) from the base marker. */
-  def geometry(spark: SparkSession, dir: String): (Int, Int) = {
-    val in = fsOf(spark, dir).open(path(s"$dir/_INDEX"))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    text.trim match {
-      case s"d=$d,w=$w" => (d.toInt, w.toInt)
-      case other => throw new IllegalStateException(
-        s"unparseable CMS geometry '$other' in $dir/_INDEX — rebuild the sketch")
-    }
-  }
+  def geometry(spark: SparkSession, dir: String): (Int, Int) = params(spark, dir)
 
-  def deltaIds(spark: SparkSession, dir: String): Seq[Long] =
-    DeltaProtocol.deltaIds(spark, dir)
-
-  /** Append batch `id`'s partial sketch — data dir first, marker last;
-    * a committed id is a replay no-op (enforced by callers via
-    * [[deltaIds]], same as the index siblings). A term-less batch
-    * commits an `empty` marker and writes no dir. */
-  def append(spark: SparkSession, dir: String, terms: DataFrame, id: Long): Unit = {
-    recover(spark, dir)
-    appendRecovered(spark, dir, terms, id)
-  }
-
-  /** [[append]] minus the recovery step — for callers (the streaming
-    * wrapper) that already ran [[recover]] this trigger; a second
-    * intent probe per micro-batch is a wasted metadata round-trip on
-    * an object store. */
-  private[graft] def appendRecovered(spark: SparkSession, dir: String,
-                                     terms: DataFrame, id: Long): Unit = {
-    require(exists(spark, dir), s"no committed CMS sketch at $dir — buildEmpty first")
-    val (d, w) = geometry(spark, dir)
-    // persisted: the emptiness probe and the write would otherwise
-    // each run the full partial-sketch aggregation from scratch
-    val cells = partialSketch(terms, d, w).persist()
-    try {
-      if (DeltaProtocol.batchIsEmpty(cells))
-        DeltaProtocol.commitDeltaMarker(spark, dir, id, empty = true)
-      else {
-        cells.write.mode("overwrite").parquet(s"$dir/cells_d$id")
-        DeltaProtocol.commitDeltaMarker(spark, dir, id)
-      }
-    } finally { cells.unpersist(); () }
-  }
-
-  /** The served sketch: cell-wise SUM over every live delta (sketch
-    * union IS addition). Fails loudly on a live delta with a missing
-    * data dir (incomplete restore), returns the empty frame for a
-    * sketch with no live deltas yet. */
-  def cells(spark: SparkSession, dir: String): DataFrame = {
-    require(exists(spark, dir), s"no committed CMS sketch at $dir")
-    val live = DeltaProtocol.liveDeltaIdsChecked(spark, dir, "CMS sketch")
-    if (live.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL("r INT, b BIGINT, cell BIGINT"))
-    else {
-      DeltaProtocol.requireDirs(spark, dir, live.map(id => s"cells_d$id"), "CMS delta")
-      spark.read.parquet(live.map(id => s"$dir/cells_d$id"): _*)
-        .groupBy(col("r"), col("b")).agg(sum(col("n")).as("cell"))
-    }
-  }
+  /** The served sketch (r, b, cell): cell-wise SUM over every live
+    * delta. */
+  def cells(spark: SparkSession, dir: String): DataFrame =
+    merged(spark, dir).withColumnRenamed("n", "cell")
 
   /** Point estimates for a (small) term frame (column `term`): min over
     * the d probed cells per term. The probe side is |terms|·d rows —
@@ -135,45 +70,16 @@ object CmsSketch {
     * an absent cell counts 0 (nothing ever hashed there), so a
     * never-inserted term estimates 0 instead of vanishing from the
     * output or taking an inflated min over fewer than d cells — the
-    * standard CMS min-over-d definition. */
+    * standard CMS min-over-d definition. The served sketch is resolved
+    * first: its existence check names an absent or mid-compact sketch
+    * before the geometry read. */
   def estimate(spark: SparkSession, dir: String, terms: DataFrame): DataFrame = {
+    val served = cells(spark, dir)
     val (d, w) = geometry(spark, dir)
     terms
       .select(col("term"), explode(sequence(lit(0), lit(d - 1))).as("r"))
       .withColumn("b", bucket(col("r"), col("term"), w))
-      .join(cells(spark, dir), Seq("r", "b"), "left")
+      .join(served, Seq("r", "b"), "left")
       .groupBy(col("term")).agg(min(coalesce(col("cell"), lit(0L))).as("est"))
-  }
-
-  /** Collapse all live deltas into one (the smallest committed id keeps
-    * the compacted cells; later markers flip to `empty` so their batch
-    * ids STAY replay-protected) — bounds the serve-path union for a
-    * long-running stream. Crash-safe under the DeltaProtocol REBUILD
-    * rule, not the flip-in-place one: because the serve SUMS deltas,
-    * any intermediate layout where the merged cells and a source delta
-    * are both visible double-counts SILENTLY — worse than failing. So
-    * the sketch is UNCOMMITTED first (`_INDEX` dropped — every reader
-    * and appender fails loudly from that point), the merged cells are
-    * moved into place, and the markers (kept delta, empty twins, then
-    * `_INDEX` LAST) re-commit the sketch only once the layout is fully
-    * consistent. The swap itself is [[DeltaProtocol.compactSwap]]: an
-    * intent marker carrying everything recovery needs lands before the
-    * point of no return, so a crash at ANY point is completed by the
-    * next compact or append call — never a readable wrong sum, never a
-    * permanently uncommitted store. Single-writer: quiesce ingest
-    * first (a delta committed after the listing would be swept). */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    recover(spark, dir)
-    val live = DeltaProtocol.liveDeltaIds(spark, dir)
-    if (live.length > 1) {
-      val (d, w) = geometry(spark, dir)
-      val all = DeltaProtocol.deltaIds(spark, dir)
-      val merged = cells(spark, dir)
-        .select(col("r"), col("b"), col("cell").as("n"))
-      val keep = live.min
-      merged.write.mode("overwrite").parquet(s"$dir/cells_compact_tmp")
-      DeltaProtocol.compactSwap(spark, dir, "cells_d", "cells_compact_tmp",
-        keep, all, s"d=$d,w=$w")
-    }
   }
 }

@@ -3,8 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 
-/** The shared delta-append bookkeeping all three persisted indexes
-  * ([[LshIndex]], [[IvfIndex]], [[IvfPqIndex]]) run — ONE copy of the
+/** The shared delta-append bookkeeping every persisted store runs —
+  * [[MergeableStore]] (the CMS / HLL / quantile sketches) and the
+  * index, cluster and text stores ([[LshIndex]], [[IvfIndex]],
+  * [[IvfPqIndex]], [[ClusterStore]], [[TextIndex]]) — ONE copy of the
   * crash rules so a protocol fix can't drift between siblings:
   *
   *  - data dirs first, `_DELTA_<id>` marker LAST: a crash mid-append
@@ -110,7 +112,7 @@ private[graft] object DeltaProtocol {
           "finishCompact) completes recovery")
   }
 
-  private def readFile(spark: SparkSession, p: String): String = {
+  def readFile(spark: SparkSession, p: String): String = {
     val in = fsOf(spark, p).open(path(p))
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
@@ -126,14 +128,13 @@ private[graft] object DeltaProtocol {
     if (!empty) fsOf(spark, dir).create(path(s"$dir/_DELTA_$id"), true).close()
     else writeFileAtomic(spark, s"$dir/_DELTA_$id", "empty")
 
-  /** Crash-safe delta collapse, shared by the mergeable sketch stores
-    * (CMS / HLL / quantile — union is addition, so ANY layout where the
-    * merged copy and a source delta are both live double-counts
-    * silently). The caller has already written the merged copy to
-    * `dir/tmpName`; this publishes it: an intent marker (`_COMPACT`,
-    * atomic, carrying the keep id, every delta id, and the `_INDEX`
-    * content) lands FIRST, then [[finishCompact]] performs the
-    * uncommit-sweep-swap-recommit. A crash at ANY point after the
+  /** Crash-safe delta collapse for [[MergeableStore]] (CMS union is
+    * addition, so ANY layout where the merged copy and a source delta
+    * are both live double-counts silently). The caller has already
+    * written the merged copy to `dir/tmpName`; this publishes it: an
+    * intent marker (`_COMPACT`, atomic, carrying the keep id, every
+    * delta id, and the `_INDEX` content) lands FIRST, then
+    * [[finishCompact]] performs the uncommit-sweep-swap-recommit. A crash at ANY point after the
     * intent is completed by the next [[finishCompact]] call (every
     * store runs it at compact AND append time), because the intent
     * holds everything recovery needs — the round-15 protocol's "re-run
@@ -235,11 +236,10 @@ private[graft] object DeltaProtocol {
     ()
   }
 
-  /** The WHOLE buildEmpty crash-ordering in one place (CMS/HLL/quantile
-    * share it verbatim, so a future ordering fix cannot drift between
-    * them): kill any stale compact intent of the prior generation
-    * FIRST (recovery against the fresh layout would corrupt it), purge
-    * the prior index, then commit the `_INDEX` geometry marker
+  /** The WHOLE buildEmpty crash-ordering in one place
+    * ([[MergeableStore]]'s reset): kill any stale compact intent of the
+    * prior generation FIRST (recovery against the fresh layout would
+    * corrupt it), purge the prior index, then commit the `_INDEX` marker
     * ATOMICALLY — create-then-write would expose a zero-length marker
     * that reads as committed but parses as garbage. */
   def resetStore(spark: SparkSession, dir: String, dataPrefix: String,

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Persisted HLL sketch store — the cardinality member completing the
   * maintained-sketch family ([[CmsSketch]] frequency, [[QuantileSketch]]
@@ -12,135 +11,49 @@ import org.apache.spark.sql.types.StructType
   * insensitive — so per-batch sketches unioned are BIT-EQUAL to the
   * one-shot sketch of everything appended: the streaming maintenance
   * story needs no approximation argument at all (HllStoreSpec pins the
-  * estimates as equality). Each micro-batch appends its own per-scope
-  * sketch (|scopes| rows of ≤ 2^lgK registers) as a delta; the serve
-  * unions live deltas — never a rescan of landed data. Per-batch cost
-  * ∝ batch rows; serve cost ∝ deltas × scopes sketches (compact()
-  * collapses them back to one).
+  * estimates as equality). A delta is |scopes| rows of ≤ 2^lgK
+  * registers.
   *
   * Uses Spark's Datasketches-backed `hll_sketch_agg` / `hll_union_agg`
   * / `hll_sketch_estimate` (the q_agg_hll_merge functions) — binary
   * sketches stored as plain parquet columns.
   *
-  * Layout under `dir` (the [[DeltaProtocol]] rules):
+  * Layout under `dir` (the [[MergeableStore]] rules):
   * {{{
   *   sk_d<id>/   (scope, sk) per-scope HLL sketch of batch <id>
-  *   _DELTA_<id> append marker (written last; `empty` for a row-less
-  *               batch)
-  *   _INDEX      base marker, carries "lgk=<lgK>" — sketch precision is
-  *               pinned at build; mixed-precision unions would silently
-  *               degrade to the coarser sketch
+  *   _INDEX      carries "lgk=<lgK>" — sketch precision is pinned at
+  *               build; mixed-precision unions would silently degrade
+  *               to the coarser sketch
   * }}}
   */
-object HllStore {
+object HllStore extends MergeableStore[Int] {
 
-  import DeltaProtocol.{fsOf, path}
+  protected val name = "HLL store"
+  protected val dataPrefix = "sk_d"
+  protected val deltaSchema = "scope STRING, sk BINARY"
+  protected val parse: PartialFunction[String, Int] = { case s"lgk=$k" => k.toInt }
+  protected def partial(rows: DataFrame, lgK: Int): DataFrame = partialSketch(rows, lgK)
+  protected def merge(deltas: DataFrame, lgK: => Int): DataFrame =
+    deltas.groupBy(col("scope")).agg(hll_union_agg(col("sk")).as("sk"))
 
   /** One partial sketch frame: per-scope HLL of a (scope, key) frame. */
   def partialSketch(rows: DataFrame, lgK: Int): DataFrame =
     rows.groupBy(col("scope")).agg(hll_sketch_agg(col("key"), lit(lgK)).as("sk"))
 
-  def exists(spark: SparkSession, dir: String): Boolean =
-    DeltaProtocol.markerExists(spark, dir)
-
-  /** Initialize an empty store with pinned precision — the streaming
-    * bootstrap: every batch (including the first) then enters through
-    * the append path, so the delta replay rules apply uniformly. */
+  /** Initialize an empty store with pinned precision. */
   def buildEmpty(spark: SparkSession, dir: String, lgK: Int = 12): Unit =
-    DeltaProtocol.resetStore(spark, dir, "sk_d", "sk_compact_tmp", s"lgk=$lgK")
-
-  /** Complete a crashed compact, if any — idempotent; [[append]] and
-    * [[compact]] run it first, and the streaming wrapper
-    * ([[graft.streaming.Streams.hllBatch]]) runs it BEFORE its
-    * existence check: mid-compact the `_INDEX` marker is down, and an
-    * exists-first caller would wedge permanently on a store the
-    * protocol promises to heal. */
-  def recover(spark: SparkSession, dir: String): Unit =
-    DeltaProtocol.finishCompact(spark, dir, "sk_d", "sk_compact_tmp")
+    reset(spark, dir, s"lgk=$lgK")
 
   /** Pinned lgK from the base marker. */
-  def precision(spark: SparkSession, dir: String): Int = {
-    val in = fsOf(spark, dir).open(path(s"$dir/_INDEX"))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    text.trim match {
-      case s"lgk=$k" => k.toInt
-      case other => throw new IllegalStateException(
-        s"unparseable HLL precision '$other' in $dir/_INDEX — rebuild the store")
-    }
-  }
+  def precision(spark: SparkSession, dir: String): Int = params(spark, dir)
 
-  def deltaIds(spark: SparkSession, dir: String): Seq[Long] =
-    DeltaProtocol.deltaIds(spark, dir)
-
-  /** Append batch `id`'s per-scope sketches — data dir first, marker
-    * last; a committed id is a replay no-op (enforced by callers via
-    * [[deltaIds]], same as the index siblings). A row-less batch
-    * commits an `empty` marker and writes no dir. `rows` must carry
-    * (scope, key). */
-  def append(spark: SparkSession, dir: String, rows: DataFrame, id: Long): Unit = {
-    recover(spark, dir)
-    appendRecovered(spark, dir, rows, id)
-  }
-
-  /** [[append]] minus the recovery step — see CmsSketch.appendRecovered. */
-  private[graft] def appendRecovered(spark: SparkSession, dir: String,
-                                     rows: DataFrame, id: Long): Unit = {
-    require(exists(spark, dir), s"no committed HLL store at $dir — buildEmpty first")
-    val lgK = precision(spark, dir)
-    // persisted: the emptiness probe and the write would otherwise each
-    // run the full hll_sketch_agg pass from scratch
-    val sk = partialSketch(rows, lgK).persist()
-    try {
-      if (DeltaProtocol.batchIsEmpty(sk))
-        DeltaProtocol.commitDeltaMarker(spark, dir, id, empty = true)
-      else {
-        sk.write.mode("overwrite").parquet(s"$dir/sk_d$id")
-        DeltaProtocol.commitDeltaMarker(spark, dir, id)
-      }
-    } finally { sk.unpersist(); () }
-  }
-
-  /** The served sketches: per-scope union over every live delta (HLL
-    * union is register-wise max, so this equals the one-shot sketch).
-    * Fails loudly on a live delta with a missing data dir (incomplete
-    * restore); empty frame for a store with no live deltas yet. */
-  def sketches(spark: SparkSession, dir: String): DataFrame = {
-    require(exists(spark, dir), s"no committed HLL store at $dir")
-    val live = DeltaProtocol.liveDeltaIdsChecked(spark, dir, "HLL store")
-    if (live.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL("scope STRING, sk BINARY"))
-    else {
-      DeltaProtocol.requireDirs(spark, dir, live.map(id => s"sk_d$id"), "HLL delta")
-      spark.read.parquet(live.map(id => s"$dir/sk_d$id"): _*)
-        .groupBy(col("scope")).agg(hll_union_agg(col("sk")).as("sk"))
-    }
-  }
+  /** The served (scope, sk) sketches: per-scope union over every live
+    * delta. */
+  def sketches(spark: SparkSession, dir: String): DataFrame = merged(spark, dir)
 
   /** Per-scope distinct-count estimates from the served sketches —
     * |scopes| rows out, sketch-sized work. */
   def estimate(spark: SparkSession, dir: String): DataFrame =
     sketches(spark, dir)
       .select(col("scope"), hll_sketch_estimate(col("sk")).as("est"))
-
-  /** Collapse all live deltas into one (smallest committed id keeps the
-    * unioned sketches; later markers flip to `empty` so their batch ids
-    * STAY replay-protected). Same REBUILD rule as the siblings — here
-    * union idempotence actually makes double-visibility HARMLESS
-    * (max(max(a,b),b) = max(a,b)), but the store keeps the uniform
-    * protocol so a reader never has to know which sketch algebra it is
-    * reading: uncommit first, swap, re-commit markers last. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    recover(spark, dir)
-    val live = DeltaProtocol.liveDeltaIds(spark, dir)
-    if (live.length > 1) {
-      val lgK = precision(spark, dir)
-      val all = DeltaProtocol.deltaIds(spark, dir)
-      val merged = sketches(spark, dir)
-      val keep = live.min
-      merged.write.mode("overwrite").parquet(s"$dir/sk_compact_tmp")
-      DeltaProtocol.compactSwap(spark, dir, "sk_d", "sk_compact_tmp",
-        keep, all, s"lgk=$lgK")
-    }
-  }
 }

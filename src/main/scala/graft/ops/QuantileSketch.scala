@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Persisted mergeable quantile sketch — the rank-statistics member of
   * the maintained-sketch family ([[CmsSketch]] frequency, the HLL
@@ -12,13 +11,8 @@ import org.apache.spark.sql.types.StructType
   * bottom-k rows by (hash-rank, value): a uniform k-sample whose
   * merge law is structural — bottom-k of a union of per-batch
   * bottom-ks IS the bottom-k of the full union, because a row's rank
-  * within its batch never exceeds its global rank. That makes the
-  * streaming maintenance story identical in shape to CMS: each
-  * micro-batch appends its own per-scope bottom-k (≤ k·scopes rows)
-  * as a delta, and the served sketch is the re-bottom-k over all live
-  * deltas — never a rescan of landed data. Per-batch cost ∝ batch
-  * rows; serve cost ∝ deltas × k·scopes rows (compact() collapses
-  * them back to one).
+  * within its batch never exceeds its global rank. A delta is ≤
+  * k·scopes rows.
   *
   * The hash rank is xxhash64 of the full row content, so identical
   * logical rows rank identically no matter which batch carried them —
@@ -28,20 +22,23 @@ import org.apache.spark.sql.types.StructType
   * contract as q_quantile_sketch: k = 4096 holds the median within
   * ~0.8% of range.)
   *
-  * Layout under `dir` (the [[DeltaProtocol]] rules):
+  * Layout under `dir` (the [[MergeableStore]] rules):
   * {{{
   *   rows_d<id>/   (scope, v, h) per-scope bottom-k of batch <id>
-  *   _DELTA_<id>   append marker (written last; `empty` for a row-less
-  *                 batch)
-  *   _INDEX        base marker, carries "k=<k>" — the sample size is
-  *                 pinned at build; deltas cut at different k would
-  *                 break the merge law's "batch rank ≤ global rank"
-  *                 argument for the larger k
+  *   _INDEX        carries "k=<k>" — the sample size is pinned at
+  *                 build; deltas cut at different k would break the
+  *                 merge law's "batch rank ≤ global rank" argument for
+  *                 the larger k
   * }}}
   */
-object QuantileSketch {
+object QuantileSketch extends MergeableStore[Int] {
 
-  import DeltaProtocol.{fsOf, path}
+  protected val name = "quantile sketch"
+  protected val dataPrefix = "rows_d"
+  protected val deltaSchema = "scope STRING, v DOUBLE, h BIGINT"
+  protected val parse: PartialFunction[String, Int] = { case s"k=$k" => k.toInt }
+  protected def partial(rows: DataFrame, k: Int): DataFrame = bottomK(rows, k)
+  protected def merge(deltas: DataFrame, k: => Int): DataFrame = bottomK(deltas, k)
 
   /** Per-scope bottom-k of a (scope, v, h) frame, partial-first: ≤ k
     * rows per input partition survive to the one exchange (the
@@ -56,83 +53,16 @@ object QuantileSketch {
       .select(col("scope"), col("v"), col("h"))
   }
 
-  def exists(spark: SparkSession, dir: String): Boolean =
-    DeltaProtocol.markerExists(spark, dir)
-
-  /** Initialize an empty sketch with pinned sample size — the streaming
-    * bootstrap: every batch (including the first) then enters through
-    * the append path, so the delta replay rules apply uniformly. */
+  /** Initialize an empty sketch with pinned sample size. */
   def buildEmpty(spark: SparkSession, dir: String, k: Int = 4096): Unit =
-    DeltaProtocol.resetStore(spark, dir, "rows_d", "rows_compact_tmp", s"k=$k")
-
-  /** Complete a crashed compact, if any — idempotent; [[append]] and
-    * [[compact]] run it first, and the streaming wrapper
-    * ([[graft.streaming.Streams.quantileBatch]]) runs it BEFORE its
-    * existence check: mid-compact the `_INDEX` marker is down, and an
-    * exists-first caller would wedge permanently on a store the
-    * protocol promises to heal. */
-  def recover(spark: SparkSession, dir: String): Unit =
-    DeltaProtocol.finishCompact(spark, dir, "rows_d", "rows_compact_tmp")
+    reset(spark, dir, s"k=$k")
 
   /** Pinned k from the base marker. */
-  def sampleSize(spark: SparkSession, dir: String): Int = {
-    val in = fsOf(spark, dir).open(path(s"$dir/_INDEX"))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    text.trim match {
-      case s"k=$k" => k.toInt
-      case other => throw new IllegalStateException(
-        s"unparseable quantile-sketch size '$other' in $dir/_INDEX — rebuild the sketch")
-    }
-  }
+  def sampleSize(spark: SparkSession, dir: String): Int = params(spark, dir)
 
-  def deltaIds(spark: SparkSession, dir: String): Seq[Long] =
-    DeltaProtocol.deltaIds(spark, dir)
-
-  /** Append batch `id`'s per-scope bottom-k — data dir first, marker
-    * last; a committed id is a replay no-op (enforced by callers via
-    * [[deltaIds]], same as the index siblings). A row-less batch
-    * commits an `empty` marker and writes no dir. `rows` must carry
-    * (scope, v, h) with h the content hash-rank. */
-  def append(spark: SparkSession, dir: String, rows: DataFrame, id: Long): Unit = {
-    recover(spark, dir)
-    appendRecovered(spark, dir, rows, id)
-  }
-
-  /** [[append]] minus the recovery step — see CmsSketch.appendRecovered. */
-  private[graft] def appendRecovered(spark: SparkSession, dir: String,
-                                     rows: DataFrame, id: Long): Unit = {
-    require(exists(spark, dir), s"no committed quantile sketch at $dir — buildEmpty first")
-    val k = sampleSize(spark, dir)
-    // persisted: the emptiness probe and the write would otherwise each
-    // run the double-window bottom-k from scratch
-    val cut = bottomK(rows, k).persist()
-    try {
-      if (DeltaProtocol.batchIsEmpty(cut))
-        DeltaProtocol.commitDeltaMarker(spark, dir, id, empty = true)
-      else {
-        cut.write.mode("overwrite").parquet(s"$dir/rows_d$id")
-        DeltaProtocol.commitDeltaMarker(spark, dir, id)
-      }
-    } finally { cut.unpersist(); () }
-  }
-
-  /** The served sketch: re-bottom-k over every live delta (the merge
-    * law — the union of per-batch bottom-ks re-cut at k IS the
-    * bottom-k of everything appended). Fails loudly on a live delta
-    * with a missing data dir (incomplete restore); empty frame for a
-    * sketch with no live deltas yet. */
-  def sketchRows(spark: SparkSession, dir: String): DataFrame = {
-    require(exists(spark, dir), s"no committed quantile sketch at $dir")
-    val k = sampleSize(spark, dir)
-    val live = DeltaProtocol.liveDeltaIdsChecked(spark, dir, "quantile sketch")
-    if (live.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL("scope STRING, v DOUBLE, h BIGINT"))
-    else {
-      DeltaProtocol.requireDirs(spark, dir, live.map(id => s"rows_d$id"), "quantile delta")
-      bottomK(spark.read.parquet(live.map(id => s"$dir/rows_d$id"): _*), k)
-    }
-  }
+  /** The served (scope, v, h) sketch: re-bottom-k over every live
+    * delta. */
+  def sketchRows(spark: SparkSession, dir: String): DataFrame = merged(spark, dir)
 
   /** Per-scope quantile estimate at fraction `p` from the served
     * sketch — |scopes| rows out, sketch-sized work. */
@@ -140,30 +70,4 @@ object QuantileSketch {
     sketchRows(spark, dir)
       .groupBy(col("scope"))
       .agg(expr(s"percentile(v, $p)").as("est"))
-
-  /** Collapse all live deltas into one (smallest committed id keeps the
-    * merged rows; later markers flip to `empty` so their batch ids STAY
-    * replay-protected) — bounds the serve-path union for a long-running
-    * stream. Same REBUILD rule as [[CmsSketch.compact]] and for the
-    * same reason: an intermediate layout where the merged rows and a
-    * source delta are both visible would feed duplicate copies into
-    * the re-bottom-k and silently distort the sample, so the sketch is
-    * UNCOMMITTED first (readers/appenders fail loudly), the merged
-    * rows move into place, and the markers (kept delta, empty twins,
-    * `_INDEX` last) re-commit only once the layout is consistent. A
-    * crash leaves either the old committed sketch or an uncommitted
-    * one — never a readable wrong sample. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    recover(spark, dir)
-    val live = DeltaProtocol.liveDeltaIds(spark, dir)
-    if (live.length > 1) {
-      val k = sampleSize(spark, dir)
-      val all = DeltaProtocol.deltaIds(spark, dir)
-      val merged = sketchRows(spark, dir)
-      val keep = live.min
-      merged.write.mode("overwrite").parquet(s"$dir/rows_compact_tmp")
-      DeltaProtocol.compactSwap(spark, dir, "rows_d", "rows_compact_tmp",
-        keep, all, s"k=$k")
-    }
-  }
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
-import graft.ops.{CmsSketch, IvfPqIndex, LshIndex, Text}
+import graft.ops.{CmsSketch, DeltaProtocol, HllStore, IvfPqIndex, LshIndex, MergeableStore, QuantileSketch, Text}
 
 /** Streaming transforms beyond the reference's executed surface
   * (README.md never windows or watermarks — its only state is source
@@ -149,37 +149,66 @@ object Streams {
     * through the same path as every other batch. */
   def nearDupIngest(docs: DataFrame, idxDir: String, outDir: String,
                     checkpointDir: String, minJac: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(batch, batchId, idxDir, outDir, minJac)
-        ()
-      }
-      .start()
+    startBatches(docs, checkpointDir)(dedupBatch(_, _, idxDir, outDir, minJac))
 
-  /** One [[nearDupIngest]] transaction, callable directly (batch-mode
-    * backfill, crash-protocol tests): probe → land survivors → commit
-    * the delta marker. Idempotent at every crash point — a committed
-    * batchId is a full no-op; a replay after a crash between the
-    * survivors write and the marker recomputes identical survivors
-    * (the index is unchanged until the marker commits) over its own
-    * partition. Returns whether this call committed the batch. */
+  /** One [[nearDupIngest]] transaction: probe → land survivors → commit
+    * the delta marker. */
   def dedupBatch(batch: DataFrame, batchId: Long, idxDir: String,
-                 outDir: String, minJac: Double = 0.5): Boolean = {
-    val s = batch.sparkSession
-    require(LshIndex.exists(s, idxDir),
-      s"no committed LSH index at $idxDir — LshIndex.buildEmpty first")
-    if (LshIndex.deltaIds(s, idxDir).contains(batchId)) false
-    else {
+                 outDir: String, minJac: Double = 0.5): Boolean =
+    exactlyOnce(batch, batchId, idxDir,
+      s"no committed LSH index at $idxDir — LshIndex.buildEmpty first") { s =>
       val dups = LshIndex.matches(s, idxDir, batch, minJac)
         .select(col("new_id").as("doc_id")).distinct()
       landAndAppend(batch.join(dups, Seq("doc_id"), "left_anti"),
         batchId, outDir, df => LshIndex.append(s, idxDir, df, batchId))
-      true
     }
+
+  /** The one starter every store maintainer below uses: `body` runs
+    * once per micro-batch of `input` under a checkpointed
+    * `foreachBatch`. */
+  private def startBatches(input: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Boolean): StreamingQuery =
+    input.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        body(batch, batchId)
+        ()
+      }
+      .start()
+
+  /** The one exactly-once transaction every store maintainer below
+    * runs — the `*Batch` methods, each callable directly (batch-mode
+    * backfill, crash-protocol tests). In order: `recover` (the sketch
+    * stores' crash-compact recovery — it must run BEFORE the existence
+    * check: mid-compact `_INDEX` is down, and an exists-first restart
+    * would wedge the stream permanently on a store the protocol
+    * promises to heal, whose 'buildEmpty first' advice would destroy
+    * the data); then a committed store is required (`missing` is the
+    * error); then a committed `batchId` is a full replay no-op; else
+    * `commit` lands the batch and commits its delta. A crash before
+    * the marker replays into an unchanged store. Returns whether this
+    * call committed the batch. */
+  private def exactlyOnce(batch: DataFrame, batchId: Long, dir: String, missing: => String,
+                          recover: (SparkSession, String) => Unit = (_, _) => ())(
+                          commit: SparkSession => Unit): Boolean = {
+    val s = batch.sparkSession
+    recover(s, dir)
+    require(DeltaProtocol.markerExists(s, dir), missing)
+    if (DeltaProtocol.deltaIds(s, dir).contains(batchId)) false
+    else { commit(s); true }
   }
 
-  /** The one land-then-append step both ingest transactions share:
+  /** [[exactlyOnce]] for a maintained sketch store: recovery first,
+    * then land the batch and append `rowsOf` the landed rows. */
+  private def sketchBatch(store: MergeableStore[_], batch: DataFrame, batchId: Long,
+                          idxDir: String, outDir: String, missing: => String)(
+                          rowsOf: DataFrame => DataFrame): Boolean =
+    exactlyOnce(batch, batchId, idxDir, missing, store.recover) { s =>
+      landAndAppend(batch, batchId, outDir, df =>
+        store.appendRecovered(s, idxDir, rowsOf(df), batchId))
+    }
+
+  /** The one land-then-append step the ingest transactions share:
     * write the batch's surviving rows into their `_batch_id` partition
     * (skipping the write entirely when there are none — the shared
     * empty-write rule, [[graft.ops.DeltaProtocol.writeBatchPartition]]:
@@ -188,12 +217,11 @@ object Streams {
     * back from the sink) as the index delta so corpus and index stay
     * in lockstep. A row-less batch appends its empty frame, which the
     * index protocol records as an `empty`-marker delta — the replay
-    * no-op. ONE copy of this skeleton: a protocol fix here reaches
-    * both [[dedupBatch]] and [[annBatch]]. */
+    * no-op. */
   private def landAndAppend(survivors: DataFrame, batchId: Long, outDir: String,
                             appendDelta: DataFrame => Unit): Unit = {
     val s = survivors.sparkSession
-    if (graft.ops.DeltaProtocol.writeBatchPartition(survivors, batchId, outDir))
+    if (DeltaProtocol.writeBatchPartition(survivors, batchId, outDir))
       appendDelta(s.read.parquet(outDir).filter(col("_batch_id") === batchId))
     else appendDelta(survivors)
   }
@@ -221,33 +249,20 @@ object Streams {
   def annIngest(vecs: DataFrame, idxDir: String, outDir: String,
                 checkpointDir: String, idCol: String = "vec_id",
                 vecCol: String = "embedding"): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        annBatch(batch, batchId, idxDir, outDir, idCol, vecCol)
-        ()
-      }
-      .start()
+    startBatches(vecs, checkpointDir)(annBatch(_, _, idxDir, outDir, idCol, vecCol))
 
-  /** One [[annIngest]] transaction, callable directly (batch-mode
-    * backfill, crash-protocol tests). Returns whether this call
-    * committed the batch. */
+  /** One [[annIngest]] transaction. */
   def annBatch(batch: DataFrame, batchId: Long, idxDir: String,
                outDir: String, idCol: String = "vec_id",
-               vecCol: String = "embedding"): Boolean = {
-    val s = batch.sparkSession
-    require(IvfPqIndex.exists(s, idxDir),
-      s"no committed IVF-PQ index at $idxDir — IvfPqIndex.build first")
-    if (IvfPqIndex.deltaIds(s, idxDir).contains(batchId)) false
-    else {
+               vecCol: String = "embedding"): Boolean =
+    exactlyOnce(batch, batchId, idxDir,
+      s"no committed IVF-PQ index at $idxDir — IvfPqIndex.build first") { s =>
       // drop("_batch_id") is a no-op on the empty-batch path (the
       // landing column is only added by the write)
       landAndAppend(batch, batchId, outDir,
         df => IvfPqIndex.append(s, idxDir, df.drop("_batch_id"),
           idCol, vecCol, batchId))
-      true
     }
-  }
 
   /** Streaming maintenance of the persisted duplicate-cluster
     * assignment ([[graft.ops.ClusterStore]]) — the clustering half of
@@ -272,24 +287,13 @@ object Streams {
     * into an identical snapshot off the unchanged previous version. */
   def clusterIngest(docs: DataFrame, pairsDir: String, storeDir: String,
                     checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        clusterBatch(batch, batchId, pairsDir, storeDir)
-        ()
-      }
-      .start()
+    startBatches(docs, checkpointDir)(clusterBatch(_, _, pairsDir, storeDir))
 
-  /** One [[clusterIngest]] transaction, callable directly (batch-mode
-    * backfill, crash-protocol tests). Returns whether this call
-    * committed the batch. */
+  /** One [[clusterIngest]] transaction. */
   def clusterBatch(batch: DataFrame, batchId: Long, pairsDir: String,
-                   storeDir: String): Boolean = {
-    val s = batch.sparkSession
-    require(graft.ops.ClusterStore.exists(s, storeDir),
-      s"no committed cluster store at $storeDir — ClusterStore.buildEmpty first")
-    if (graft.ops.ClusterStore.deltaIds(s, storeDir).contains(batchId)) false
-    else {
+                   storeDir: String): Boolean =
+    exactlyOnce(batch, batchId, storeDir,
+      s"no committed cluster store at $storeDir — ClusterStore.buildEmpty first") { s =>
       val b = batch.select(col("doc_id").as("id")).distinct().localCheckpoint()
       val assigned = graft.ops.ClusterStore.read(s, storeDir) // (id, lab)
       val known = assigned.select(col("id")).union(b)
@@ -318,9 +322,7 @@ object Streams {
         .select(col("id_a"), col("id_b"))
       val fired = inBatch.select(col("id_a"), col("id_b")).union(late).distinct()
       graft.ops.ClusterStore.append(s, storeDir, b, fired, batchId)
-      true
     }
-  }
 
   /** Streaming maintenance of the persisted count-min sketch
     * ([[graft.ops.CmsSketch]]) — the frequency-statistics half of the
@@ -330,42 +332,18 @@ object Streams {
     * delta. Because CMS union is cell-wise addition, the served sketch
     * over base+deltas equals the sketch of everything landed — corpus
     * statistics stay fresh without ever re-tokenizing landed data.
-    * Exactly-once by the delta marker, same rules as [[nearDupIngest]]
-    * and [[annIngest]]: a committed batch is a replay no-op, a crash
-    * between the landing write and the marker replays into an
-    * unchanged sketch and rewrites an identical `_batch_id` partition. */
+    * Exactly-once by the delta marker, same rules as [[nearDupIngest]].
+    * Bootstrap with [[graft.ops.CmsSketch.buildEmpty]]. */
   def cmsIngest(docs: DataFrame, idxDir: String, outDir: String,
                 checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cmsBatch(batch, batchId, idxDir, outDir)
-        ()
-      }
-      .start()
+    startBatches(docs, checkpointDir)(cmsBatch(_, _, idxDir, outDir))
 
-  /** One [[cmsIngest]] transaction, callable directly (batch-mode
-    * backfill, crash-protocol tests). Returns whether this call
-    * committed the batch. */
+  /** One [[cmsIngest]] transaction. */
   def cmsBatch(batch: DataFrame, batchId: Long, idxDir: String,
-               outDir: String): Boolean = {
-    val s = batch.sparkSession
-    // recovery BEFORE the existence check: mid-compact the _INDEX
-    // marker is down, and an exists-first restart would wedge the
-    // stream permanently on a store the protocol promises to heal
-    CmsSketch.recover(s, idxDir)
-    require(CmsSketch.exists(s, idxDir),
-      s"no committed CMS sketch at $idxDir — CmsSketch.buildEmpty first")
-    if (CmsSketch.deltaIds(s, idxDir).contains(batchId)) false
-    else {
-      landAndAppend(batch, batchId, outDir, df =>
-        CmsSketch.appendRecovered(s, idxDir,
-          df.select(explode(Text.tokens(col("text"))).as("term"))
-            .filter(col("term") =!= ""),
-          batchId))
-      true
-    }
-  }
+               outDir: String): Boolean =
+    sketchBatch(CmsSketch, batch, batchId, idxDir, outDir,
+      s"no committed CMS sketch at $idxDir — CmsSketch.buildEmpty first")(
+      _.select(explode(Text.tokens(col("text"))).as("term")).filter(col("term") =!= ""))
 
   /** Streaming maintenance of the persisted quantile sketch
     * ([[graft.ops.QuantileSketch]]) — the rank-statistics member of
@@ -380,31 +358,14 @@ object Streams {
     * [[graft.ops.QuantileSketch.buildEmpty]]. */
   def quantileIngest(events: DataFrame, idxDir: String, outDir: String,
                      checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        quantileBatch(batch, batchId, idxDir, outDir)
-        ()
-      }
-      .start()
+    startBatches(events, checkpointDir)(quantileBatch(_, _, idxDir, outDir))
 
-  /** One [[quantileIngest]] transaction, callable directly (batch-mode
-    * backfill, crash-protocol tests). Returns whether this call
-    * committed the batch. */
+  /** One [[quantileIngest]] transaction. */
   def quantileBatch(batch: DataFrame, batchId: Long, idxDir: String,
-                    outDir: String): Boolean = {
-    val s = batch.sparkSession
-    // same recovery-first rule as cmsBatch
-    graft.ops.QuantileSketch.recover(s, idxDir)
-    require(graft.ops.QuantileSketch.exists(s, idxDir),
-      s"no committed quantile sketch at $idxDir — QuantileSketch.buildEmpty first")
-    if (graft.ops.QuantileSketch.deltaIds(s, idxDir).contains(batchId)) false
-    else {
-      landAndAppend(batch, batchId, outDir, df =>
-        graft.ops.QuantileSketch.appendRecovered(s, idxDir, sketchRowsOf(df), batchId))
-      true
-    }
-  }
+                    outDir: String): Boolean =
+    sketchBatch(QuantileSketch, batch, batchId, idxDir, outDir,
+      s"no committed quantile sketch at $idxDir — QuantileSketch.buildEmpty first")(
+      sketchRowsOf)
 
   /** The (scope, v, h) frame a quantile-sketch append consumes, from
     * an events frame: scope = event_type, v = value, h = xxhash64 of
@@ -428,31 +389,13 @@ object Streams {
     * Bootstrap with [[graft.ops.HllStore.buildEmpty]]. */
   def hllIngest(events: DataFrame, idxDir: String, outDir: String,
                 checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hllBatch(batch, batchId, idxDir, outDir)
-        ()
-      }
-      .start()
+    startBatches(events, checkpointDir)(hllBatch(_, _, idxDir, outDir))
 
-  /** One [[hllIngest]] transaction, callable directly (batch-mode
-    * backfill, crash-protocol tests). Returns whether this call
-    * committed the batch. */
+  /** One [[hllIngest]] transaction. */
   def hllBatch(batch: DataFrame, batchId: Long, idxDir: String,
-               outDir: String): Boolean = {
-    val s = batch.sparkSession
-    // same recovery-first rule as cmsBatch
-    graft.ops.HllStore.recover(s, idxDir)
-    require(graft.ops.HllStore.exists(s, idxDir),
-      s"no committed HLL store at $idxDir — HllStore.buildEmpty first")
-    if (graft.ops.HllStore.deltaIds(s, idxDir).contains(batchId)) false
-    else {
-      landAndAppend(batch, batchId, outDir, df =>
-        graft.ops.HllStore.appendRecovered(s, idxDir, hllRowsOf(df), batchId))
-      true
-    }
-  }
+               outDir: String): Boolean =
+    sketchBatch(HllStore, batch, batchId, idxDir, outDir,
+      s"no committed HLL store at $idxDir — HllStore.buildEmpty first")(hllRowsOf)
 
   /** The (scope, key) frame an HLL append consumes, from an events
     * frame: scope = event_type, key = user_id — ONE definition shared
@@ -466,39 +409,23 @@ object Streams {
     * tokenized and aggregated ONCE into its own term-bucketed postings
     * segment, so BM25 serving stays fresh without ever re-tokenizing
     * the landed corpus. Exactly-once by the delta marker, same rules
-    * as [[annIngest]]: a committed batch is a replay no-op, a crash
-    * between the landing write and the marker replays into an
-    * unchanged index and rewrites an identical `_batch_id` partition.
-    * Bootstrap with [[graft.ops.TextIndex.build]] over the base
-    * corpus. */
+    * as [[annIngest]]. Bootstrap with [[graft.ops.TextIndex.build]]
+    * over the base corpus. */
   def textIngest(docs: DataFrame, idxDir: String, outDir: String,
                  checkpointDir: String, idCol: String = "doc_id",
                  textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        textBatch(batch, batchId, idxDir, outDir, idCol, textCol)
-        ()
-      }
-      .start()
+    startBatches(docs, checkpointDir)(textBatch(_, _, idxDir, outDir, idCol, textCol))
 
-  /** One [[textIngest]] transaction, callable directly (batch-mode
-    * backfill, crash-protocol tests). Returns whether this call
-    * committed the batch. */
+  /** One [[textIngest]] transaction. */
   def textBatch(batch: DataFrame, batchId: Long, idxDir: String,
                 outDir: String, idCol: String = "doc_id",
-                textCol: String = "text"): Boolean = {
-    val s = batch.sparkSession
-    require(graft.ops.TextIndex.exists(s, idxDir),
-      s"no committed text index at $idxDir — TextIndex.build first")
-    if (graft.ops.TextIndex.deltaIds(s, idxDir).contains(batchId)) false
-    else {
+                textCol: String = "text"): Boolean =
+    exactlyOnce(batch, batchId, idxDir,
+      s"no committed text index at $idxDir — TextIndex.build first") { s =>
       landAndAppend(batch, batchId, outDir, df =>
         graft.ops.TextIndex.append(s, idxDir, df.drop("_batch_id"),
           batchId, idCol, textCol))
-      true
     }
-  }
 
   /** Watermarked stream-stream INTERVAL join: each purchase matched to
     * every click by the same user with `c_ts` in

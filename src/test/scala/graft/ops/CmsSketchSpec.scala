@@ -7,7 +7,7 @@ import graft.streaming.Streams
 /** Persisted CMS store: mergeability (delta sum == one-shot sketch),
   * one-sided estimates, the delta crash/replay protocol, empty-batch
   * discipline, and compaction invariance. */
-class CmsSketchSpec extends SparkSpec {
+class CmsSketchSpec extends SparkSpec with MergeableStoreBehaviors {
   import spark.implicits._
 
   private def terms(ts: String*) = ts.toDF("term")
@@ -83,72 +83,26 @@ class CmsSketchSpec extends SparkSpec {
     assert(est.head.getLong(1) >= 2L)
   }
 
-  test("a crash mid-compact is completed by the next compact or append call") {
-    val dir = tmpDir("cms_compact_crash")
-    CmsSketch.buildEmpty(spark, dir, d = 2, w = 64)
-    CmsSketch.append(spark, dir, terms("a", "b"), 0L)
-    CmsSketch.append(spark, dir, terms("b", "c"), 1L)
-    val before = cellMap(dir)
-    // worst crash point: merged copy + intent landed, old layout swept,
-    // markers NOT re-committed. Pre-intent-marker protocol this state
-    // was UNRECOVERABLE: <=1 live delta meant a compact re-run no-op'd
-    // and the store stayed permanently uncommitted.
-    CmsSketch.cells(spark, dir).select(col("r"), col("b"), col("cell").as("n"))
-      .write.mode("overwrite").parquet(s"$dir/cells_compact_tmp")
-    DeltaProtocol.writeFileAtomic(spark, s"$dir/_COMPACT",
-      "keep=0\nall=0,1\nindex=d=2,w=64")
-    DeltaProtocol.clearPriorIndex(spark, dir, Seq("cells_d"))
-    assert(!CmsSketch.exists(spark, dir))
-    CmsSketch.compact(spark, dir) // recovery completes the swap
-    assert(CmsSketch.exists(spark, dir))
-    assert(CmsSketch.deltaIds(spark, dir) == Seq(0L, 1L))
-    assert(DeltaProtocol.liveDeltaIds(spark, dir) == Seq(0L))
-    assert(cellMap(dir) == before)
-    // a crash AFTER the rename (tmp gone, markers dropped again)
-    // recovers through the APPEND door, then the append lands
-    val fs = DeltaProtocol.fsOf(spark, dir)
-    fs.delete(DeltaProtocol.path(s"$dir/_INDEX"), false)
-    fs.delete(DeltaProtocol.path(s"$dir/_DELTA_0"), false)
-    fs.delete(DeltaProtocol.path(s"$dir/_DELTA_1"), false)
-    DeltaProtocol.writeFileAtomic(spark, s"$dir/_COMPACT",
-      "keep=0\nall=0,1\nindex=d=2,w=64")
-    CmsSketch.append(spark, dir, terms("c"), 2L)
-    assert(CmsSketch.deltaIds(spark, dir) == Seq(0L, 1L, 2L))
-    assert(cellMap(dir) != before) // the post-recovery append landed
-  }
-
   test("geometry is pinned at build and round-trips") {
     val dir = tmpDir("cms_geom")
     CmsSketch.buildEmpty(spark, dir, d = 7, w = 33)
     assert(CmsSketch.geometry(spark, dir) == ((7, 33)))
   }
 
-  test("a stream restart heals a mid-compact crash instead of wedging on the existence check") {
-    val dir = tmpDir("cms_stream_heal")
-    val idx = s"$dir/idx"; val out = s"$dir/out"
-    CmsSketch.buildEmpty(spark, idx, d = 2, w = 64)
-    val docs = Seq((1L, "x y x"), (2L, "y z")).toDF("doc_id", "text")
-    assert(Streams.cmsBatch(docs, 0L, idx, out))
-    val docs1 = Seq((3L, "z q")).toDF("doc_id", "text")
-    assert(Streams.cmsBatch(docs1, 1L, idx, out))
-    val before = cellMap(idx)
-    // worst-case compact crash: intent + merged copy landed, store
-    // UNCOMMITTED (_INDEX down). The next foreachBatch after restart
-    // goes through Streams.cmsBatch — which must run recovery BEFORE
-    // its existence check, or every restart throws 'buildEmpty first'
-    // forever (and following that advice would destroy the data)
-    CmsSketch.cells(spark, idx).select(col("r"), col("b"), col("cell").as("n"))
-      .write.mode("overwrite").parquet(s"$idx/cells_compact_tmp")
-    DeltaProtocol.writeFileAtomic(spark, s"$idx/_COMPACT",
-      "keep=0\nall=0,1\nindex=d=2,w=64")
-    DeltaProtocol.clearPriorIndex(spark, idx, Seq("cells_d"))
-    assert(!CmsSketch.exists(spark, idx))
-    val docs2 = Seq((4L, "q q")).toDF("doc_id", "text")
-    assert(Streams.cmsBatch(docs2, 2L, idx, out)) // heals, then lands
-    assert(CmsSketch.exists(spark, idx))
-    val est = CmsSketch.estimate(spark, idx, terms("q")).collect()
-    assert(est.head.getLong(1) >= 3L) // pre-crash q + the new q q
-    assert(cellMap(idx) != before)
+  compactCrashTests(StoreCase(CmsSketch, "d=2,w=64", "cells_d", "cells_compact_tmp",
+    rows = Seq(terms("a", "b"), terms("b", "c"), terms("c")),
+    batches = Seq(Seq((1L, "x y x"), (2L, "y z")), Seq((3L, "z q")), Seq((4L, "q q")))
+      .map(_.toDF("doc_id", "text")),
+    ingest = Streams.cmsBatch(_, _, _, _), view = cellMap,
+    healed = idx => {
+      val est = CmsSketch.estimate(spark, idx, terms("q")).collect()
+      assert(est.head.getLong(1) >= 3L) // pre-crash q + the new q q
+    }))
+
+  test("estimate on a never-built sketch fails with the protocol's error") {
+    val e = intercept[IllegalArgumentException](
+      CmsSketch.estimate(spark, tmpDir("cms_absent"), terms("a")))
+    assert(e.getMessage.contains("no committed CMS sketch"), e.getMessage)
   }
 
   test("buildEmpty clears a stale compact intent; absent terms estimate 0, not vanish") {

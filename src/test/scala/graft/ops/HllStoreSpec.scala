@@ -9,7 +9,7 @@ import graft.streaming.Streams
   * duplicates invisible by the algebra), the delta crash/replay
   * protocol, empty-batch discipline, compaction invariance, and the
   * pinned precision. */
-class HllStoreSpec extends SparkSpec {
+class HllStoreSpec extends SparkSpec with MergeableStoreBehaviors {
   import spark.implicits._
 
   private def rowsOf(vs: (String, Long)*) = vs.toDF("scope", "key")
@@ -79,6 +79,12 @@ class HllStoreSpec extends SparkSpec {
     HllStore.append(spark, dir, rowsOf(("b", 5L)), 3L)
     assert(estMap(dir)("b") == 2L)
   }
+
+  compactCrashTests(StoreCase(HllStore, "lgk=11", "sk_d", "sk_compact_tmp",
+    rows = Seq(rowsOf(("a", 1L), ("a", 2L)), rowsOf(("a", 3L), ("b", 4L)), rowsOf(("c", 5L))),
+    batches = Seq(events((1L, 10L, "click", 1.5), (2L, 11L, "click", 2.5)),
+      events((3L, 12L, "view", 3.5)), events((4L, 13L, "buy", 4.5))),
+    ingest = Streams.hllBatch(_, _, _, _), view = estMap))
 
   test("precision is pinned at build and round-trips") {
     val dir = tmpDir("hll_lgk")

@@ -8,7 +8,7 @@ import graft.streaming.Streams
   * (delta-merged serve == one-shot bottom-k of everything appended),
   * the delta crash/replay protocol, empty-batch discipline, compaction
   * invariance, and the pinned sample size. */
-class QuantileSketchSpec extends SparkSpec {
+class QuantileSketchSpec extends SparkSpec with MergeableStoreBehaviors {
   import spark.implicits._
 
   private def rowsOf(vs: (String, Double, Long)*) =
@@ -92,6 +92,13 @@ class QuantileSketchSpec extends SparkSpec {
     QuantileSketch.append(spark, dir, rowsOf(("b", 6.0, 3L)), 3L)
     assert(served(dir).filter(_._1 == "b").map(_._3).sorted == Seq(3L, 7L))
   }
+
+  compactCrashTests(StoreCase(QuantileSketch, "k=2", "rows_d", "rows_compact_tmp",
+    rows = Seq(rowsOf(("a", 1.0, 30L), ("a", 2.0, 10L)), rowsOf(("a", 3.0, 20L), ("b", 4.0, 7L)),
+      rowsOf(("b", 6.0, 3L))),
+    batches = Seq(events((1L, 10L, "click", 1.5), (2L, 11L, "view", 2.5)),
+      events((3L, 12L, "click", 3.5)), events((4L, 13L, "buy", 4.5))),
+    ingest = Streams.quantileBatch(_, _, _, _), view = served))
 
   test("sample size is pinned at build and round-trips") {
     val dir = tmpDir("qnt_k")
