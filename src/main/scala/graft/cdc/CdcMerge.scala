@@ -10,8 +10,15 @@ import org.apache.spark.sql.functions._
   * delete application (`op='d'` removes the key; README.md:260, 348) —
   * without the Hudi runtime.
   *
-  * Scale design (100 TB): both entry points are ONE hash shuffle on the
-  * record key (the window partitioning / join key), same as Hudi's
+  * The merge law is written once: [[upsert]] is [[unionLog]] (existing
+  * rows tagged older than the batch's) collapsed by [[snapshot]]. The
+  * two steps are public so a caller can place its own exchange between
+  * them: [[FileGroups]] hash-partitions the union log by file group and
+  * collapses on (file group, key), which that partitioning already
+  * satisfies.
+  *
+  * Scale design (100 TB): `snapshot` and `upsert` are ONE hash shuffle
+  * on the record key (the window partitioning), same as Hudi's
   * key-to-file-group distribution (SURVEY.md §3.3 step 4). `upsert`
   * additionally offers a join-pruned path: only the partitions whose keys
   * appear in the batch are rewritten — at scale a micro-batch touches a
@@ -34,23 +41,34 @@ object CdcMerge {
       .drop("_rn")
   }
 
-  /** Incremental COW merge of one micro-batch into the existing table
-    * state (U1-U6). The existing table is treated as already-deduped
-    * (one row per key, no delete rows); batch rows win over existing rows
-    * at equal `ord` (later batch = newer).
+  /** Source tag [[unionLog]] adds: 0 on existing rows, 1 on batch rows. */
+  val SrcCol = "_src"
+
+  /** The union step of [[upsert]]: the existing table (its `opCol`
+    * filled with the snapshot-read op when absent) tagged `SrcCol` = 0,
+    * by name with the batch tagged 1. Collapsing it with [[snapshot]]
+    * on `ord :+ SrcCol` and dropping `SrcCol` is [[upsert]]; the tag
+    * breaks ord ties in favor of the incoming batch.
     *
     * Schema drift: `unionByName(allowMissingColumns=true)` reconciles the
     * shapes (U6, Hudi `reconcile.schema`, README.md:308).
     */
-  def upsert(table: DataFrame, batch: DataFrame, keys: Seq[String], ord: Seq[String],
-             opCol: String = "op"): DataFrame = {
+  def unionLog(table: DataFrame, batch: DataFrame, opCol: String = "op"): DataFrame = {
     val t = if (table.columns.contains(opCol)) table
             else table.withColumn(opCol, lit(Envelope.OpSnapshotRead))
-    // _src breaks ord ties in favor of the incoming batch.
-    val all = t.withColumn("_src", lit(0))
-      .unionByName(batch.withColumn("_src", lit(1)), allowMissingColumns = true)
-    snapshot(all, keys, ord :+ "_src", opCol).drop("_src")
+    t.withColumn(SrcCol, lit(0))
+      .unionByName(batch.withColumn(SrcCol, lit(1)), allowMissingColumns = true)
   }
+
+  /** Incremental COW merge of one micro-batch into the existing table
+    * state (U1-U6): [[unionLog]] collapsed by [[snapshot]]. The existing
+    * table is treated as already-deduped (one row per key, no delete
+    * rows); batch rows win over existing rows at equal `ord` (later
+    * batch = newer).
+    */
+  def upsert(table: DataFrame, batch: DataFrame, keys: Seq[String], ord: Seq[String],
+             opCol: String = "op"): DataFrame =
+    snapshot(unionLog(table, batch, opCol), keys, ord :+ SrcCol, opCol).drop(SrcCol)
 
   /** Join-pruned variant for large tables: rows of `table` whose key does
     * not appear in `batch` pass through untouched (no shuffle write for

@@ -32,7 +32,7 @@ object Clustering {
 
   // ONE per-path FS resolution (DeltaProtocol.fsOf): the default-FS
   // instance breaks when the table dir lives on a different filesystem
-  import graft.ops.DeltaProtocol.{fsOf, path}
+  import graft.ops.DeltaProtocol.{fsOf, markerId, path}
 
   /** Z-order (Morton) interleave of two non-negative integer columns,
     * `bits` low bits each: bit i of `a` lands at position 2i+1, bit i of
@@ -95,9 +95,7 @@ object Clustering {
     val retained = Ingest.snapshotVersions(sess, dir).toSet
     if (fs.exists(path(dir))) fs.listStatus(path(dir)).map(_.getPath).foreach { p =>
       val n = p.getName
-      val id = if (n.startsWith("_CLUSTER_")) Some(n.stripPrefix("_CLUSTER_").toLong)
-               else if (n.startsWith("c")) n.stripPrefix("c").toLongOption
-               else None
+      val id = markerId(n, "_CLUSTER_").orElse(markerId(n, "c"))
       if (id.exists(i => !retained.contains(i))) fs.delete(p, true)
     }
     Ingest.committedBatch(sess, dir).filterNot(clusteredId(sess, dir).contains).map { id =>

@@ -64,7 +64,7 @@ object FileGroups {
 
   // ONE per-path FS resolution (DeltaProtocol.fsOf): the default-FS
   // instance breaks when the table dir lives on a different filesystem
-  import graft.ops.DeltaProtocol.{fsOf, path}
+  import graft.ops.DeltaProtocol.{fsOf, markerId, path}
 
   /** Per-table commit lock (keyed by table dir): makes the
     * head-check → merge → manifest → marker sequence ATOMIC for
@@ -97,6 +97,24 @@ object FileGroups {
     * envelope schema (schema drift reconciles non-key columns only). */
   private def bucketCol(keys: Seq[String], nBuckets: Int) =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong))
+
+  /** The buckets `batch`'s rows hash into: ONE job and no exchange —
+    * each partition ORs its rows' buckets into an nBuckets-bit set, and
+    * the collected sets (≤ one per partition) are OR-ed locally. */
+  private def bucketsOf(sess: SparkSession, batch: DataFrame, keys: Seq[String],
+                        nBuckets: Int): Set[Long] = {
+    import sess.implicits._
+    import scala.collection.{immutable, mutable}
+    batch.select(bucketCol(keys, nBuckets)).as[Long]
+      .mapPartitions { bs =>
+        val seen = mutable.BitSet.empty
+        bs.foreach(b => seen += b.toInt)
+        Iterator.single(seen.toBitMask)
+      }.collect()
+      .map(immutable.BitSet.fromBitMask)
+      .foldLeft(immutable.BitSet.empty)(_ | _)
+      .toSet[Int].map(_.toLong)
+  }
 
   private final case class Entry(bucket: Long, relPath: String,
                                  lo: Option[Long], hi: Option[Long], count: Long,
@@ -339,10 +357,13 @@ object FileGroups {
     * invalidate every historical assignment). Returns the set of dirty
     * buckets rewritten (empty when the batch id was already committed).
     *
-    * Scale: the dirty-bucket list is a `collect()` of ≤ nBuckets longs
-    * (index metadata, not data); the merge itself is
-    * [[CdcMerge.upsert]] over just the dirty buckets' rows — one hash
-    * shuffle whose input is ∝ touched file groups. */
+    * Scale: the dirty-bucket list is one exchange-free pass over the
+    * batch that collects a ≤ nBuckets-bit set per partition (index
+    * metadata, not data). The merge is [[CdcMerge]]'s law over
+    * just the dirty buckets' rows, read at the manifest's schema, with
+    * ONE hash shuffle on the file group: its input is ∝ touched file
+    * groups, and each group lands whole in one task, which writes its
+    * one data file. */
   def commit(sess: SparkSession, dir: String, batch: DataFrame, batchId: Long,
              keys: Seq[String], ord: Seq[String], nBuckets: Int = 16): Set[Long] =
     commitOutcome(sess, dir, batch, batchId, keys, ord, nBuckets,
@@ -406,13 +427,11 @@ object FileGroups {
       }
       // persisted across the bucket-discovery and merge jobs so the
       // batch plan (often a windowed snapshot scan or a routed join)
-      // computes ONCE; this collect doubles as the emptiness probe —
+      // computes ONCE; the discovery doubles as the emptiness probe —
       // dirty is empty iff the batch has no rows
       batch.persist()
       try {
-      val withB = batch.withColumn("_bucket", bucketCol(keys, nb))
-      val dirty = withB.select(col("_bucket")).distinct()
-        .collect().map(_.getLong(0)).toSet
+      val dirty = bucketsOf(sess, batch, keys, nb)
       if (dirty.isEmpty && !allowEmpty)
         // a rowless batch publishes NO version: an empty commit would
         // still bump the head, and a re-run no-op statement (idempotent
@@ -420,31 +439,36 @@ object FileGroups {
         // snapshots out of the retention window
         return Committed(Set.empty)
       val existingDirty = current.filter(e => dirty.contains(e.bucket))
-      // ONE multi-path scan over the dirty buckets (mergeSchema
-      // reconciles drifted buckets) — a per-bucket read would launch a
-      // job per file group
+      // ONE multi-path scan over the dirty buckets (a per-bucket read
+      // would launch a job per file group), typed by the schema the
+      // manifest pins: columns a bucket's files lack read as typed
+      // NULLs, and no footer-reading schema-merge job runs. Only a
+      // manifest without a #schema= header still needs mergeSchema.
+      val reader = prevSchema match {
+        case Some(st) => sess.read.schema(st)
+        case None => sess.read.option("mergeSchema", "true")
+      }
       val existing =
         if (existingDirty.isEmpty) None
-        else Some(sess.read.option("mergeSchema", "true")
-          .parquet(existingDirty.map(e => s"$dir/${e.relPath}"): _*))
-      val merged = existing match {
-        case Some(t) => CdcMerge.upsert(t, batch, keys, ord)
-        case None => CdcMerge.snapshot(batch, keys, ord)
+        else Some(reader.parquet(existingDirty.map(e => s"$dir/${e.relPath}"): _*))
+      val (log, order) = existing match {
+        case Some(t) => (CdcMerge.unionLog(t, batch), ord :+ CdcMerge.SrcCol)
+        case None => (batch, ord)
       }
-      // persisted across the write and the stats pass so the dirty
-      // buckets' merge runs once, not twice.
-      // r22 (guide §6, small files): repartition by _bucket BEFORE the
-      // dynamic-partitioned write — without it every upstream task
-      // writes one file per bucket it happens to hold (tasks × buckets
-      // files: measured 491 tiny parquet+crc files per sf0.1 commit,
-      // and the file-creation fan-out was the single dominant job of
-      // every CDC lifecycle statement, 2.2–2.9 s of 4–5 s wall). One
-      // exchange of the merged (dirty-buckets-sized) rows buys one
-      // compact file per file group — which is the store's layout
-      // intent (the manifest's Entry is the bucket dir) and the
-      // Iceberg write.distribution-mode=hash shape at any scale.
-      val out = merged.withColumn("_bucket", bucketCol(keys, nb))
-        .repartition(nb, col("_bucket")).persist()
+      // ONE exchange: the union log hash-partitioned by _bucket. The
+      // latest-wins window runs on (_bucket, keys), which that
+      // partitioning already satisfies (_bucket is a function of the
+      // keys), and every bucket lands whole in one task — so the
+      // dynamic-partitioned write emits one compact file per file group
+      // (the manifest's Entry is the bucket dir; the Iceberg
+      // write.distribution-mode=hash shape) without a second shuffle.
+      // The partition count is the session's (AQE may coalesce it).
+      // Persisted across the write and the stats pass so the merge runs
+      // once, not twice.
+      val out = CdcMerge.snapshot(
+          log.withColumn("_bucket", bucketCol(keys, nb)).repartition(col("_bucket")),
+          "_bucket" +: keys, order)
+        .drop(CdcMerge.SrcCol).persist()
       out.write.mode("overwrite").partitionBy("_bucket").parquet(s"$dir/files/v$batchId")
       // per-bucket stats + key blooms ([[rewriteEntries]]): blooms for
       // ANY key shape, [lo,hi] stats additionally for single
@@ -453,8 +477,6 @@ object FileGroups {
       // simply leaves the manifest.
       val (stats, dirtyOrdHi) = rewriteEntries(out, keys, batchId, ord)
       out.unpersist()
-      // a dirty bucket can merge to EMPTY (every key deleted) — it then
-      // has no partition dir and simply leaves the manifest
       val entries = current.filterNot(e => dirty.contains(e.bucket)) ++ stats
       // the version's ord ceiling (see writeManifest's #ordhi note):
       // surviving dirty rows' max joined with the prior ceiling (the
@@ -469,13 +491,15 @@ object FileGroups {
         case _ => None
       }
       // manifest schema = the merge's schema RECONCILED with the prior
-      // manifest's: the merge only saw the dirty buckets, so a column
-      // living only in clean buckets (prior drift) or added by a
-      // schema-widening DDL commit would otherwise silently VANISH
-      // from the SQL door's table schema on the next unrelated commit
+      // manifest's: a merge that read no existing bucket saw only the
+      // batch, and one behind a header-less manifest saw only the
+      // dirty buckets' files, so a column living only in clean buckets
+      // (prior drift) or added by a schema-widening DDL commit would
+      // otherwise silently VANISH from the SQL door's table schema on
+      // the next unrelated commit
       // (the data is still there — mergeSchema reads would see it, the
       // manifest-typed catalog scan would not)
-      writeManifest(sess, dir, batchId, nb, widenWith(merged.schema, prevSchema),
+      writeManifest(sess, dir, batchId, nb, widenWith(out.drop("_bucket").schema, prevSchema),
         keys, ord, entries, ordHi)
       // the marker is the atomic publish point; createNewFile returning
       // false means ANOTHER PROCESS published this id between our head
@@ -1156,8 +1180,9 @@ object FileGroups {
           .parquet(dirtyBuckets.map(e => s"$dir/${e.relPath}"): _*)
           .filter(!coalesce(tupleMatch(keys, probes), lit(false)))
           .withColumn("_bucket", bucketCol(keys, nb))
-          // r22: one compact file per rewritten file group (see the
-          // commit path's repartition note — same small-files fix)
+          // one compact file per rewritten file group: without the
+          // exchange every upstream task writes one file per bucket it
+          // happens to hold (tasks × buckets small files)
           .repartition(nb, col("_bucket")).persist()
         kept.write.mode("overwrite").partitionBy("_bucket").parquet(s"$dir/files/v$batchId")
         val (stats, _) = rewriteEntries(kept, keys, batchId)
@@ -1326,8 +1351,7 @@ object FileGroups {
     val fs = fsOf(sess, dir)
     if (!fs.exists(path(dir))) None
     else fs.listStatus(path(dir)).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_PURGE_") => n.stripPrefix("_PURGE_").toLong }
-      .sorted.lastOption
+      .flatMap(markerId(_, "_PURGE_")).sorted.lastOption
   }
 
   /** Purge step 3 — forget history: drop every manifest + commit marker

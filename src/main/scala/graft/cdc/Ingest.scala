@@ -240,17 +240,11 @@ object Ingest extends org.apache.spark.internal.Logging {
 
   // ONE per-path FS resolution (DeltaProtocol.fsOf): the default-FS
   // instance breaks when the table dir lives on a different filesystem
-  import graft.ops.DeltaProtocol.fsOf
+  import graft.ops.DeltaProtocol.{fsOf, markerId}
 
   /** Highest committed batch id under `dir`, if any. */
-  def committedBatch(spark: SparkSession, dir: String): Option[Long] = {
-    val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("_COMMIT_") => n.stripPrefix("_COMMIT_").toLong }
-      .maxOption
-  }
+  def committedBatch(spark: SparkSession, dir: String): Option[Long] =
+    snapshotVersions(spark, dir).lastOption
 
   /** Read the current committed snapshot state (empty if none);
     * prefers a clustered REPLACE copy of the base when [[Clustering]]
@@ -264,9 +258,7 @@ object Ingest extends org.apache.spark.internal.Logging {
     val fs = fsOf(spark, dir)
     val p = new org.apache.hadoop.fs.Path(dir)
     if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("_COMMIT_") => n.stripPrefix("_COMMIT_").toLong }
-      .sorted.toSeq
+    else fs.listStatus(p).toSeq.flatMap(s => markerId(s.getPath.getName, "_COMMIT_")).sorted
   }
 
   /** Time travel: read the table as of a specific committed batch

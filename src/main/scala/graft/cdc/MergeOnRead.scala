@@ -37,7 +37,7 @@ object MergeOnRead {
 
   // ONE per-path FS resolution (DeltaProtocol.fsOf): the default-FS
   // instance breaks when the table dir lives on a different filesystem
-  import graft.ops.DeltaProtocol.{fsOf, path}
+  import graft.ops.DeltaProtocol.{fsOf, markerId, path}
 
   /** Batch ids of committed (marker present) pending log deltas — the
     * same `_DELTA_<id>` marker scan as the persisted ops indexes, ONE
@@ -129,9 +129,7 @@ object MergeOnRead {
       val saved = Savepoints.savepoints(sess, dir)
       fs.listStatus(path(dir)).map(_.getPath).foreach { p =>
         val n = p.getName
-        val id = if (n.startsWith("_COMMIT_")) Some(n.stripPrefix("_COMMIT_").toLong)
-                 else if (n.startsWith("v")) n.stripPrefix("v").toLongOption
-                 else None
+        val id = markerId(n, "_COMMIT_").orElse(markerId(n, "v"))
         if (id.exists(i => i < prevBase && !saved.contains(i))) fs.delete(p, true)
       }
       Some(target)

@@ -27,15 +27,14 @@ object Savepoints {
 
   // ONE per-path FS resolution (DeltaProtocol.fsOf): the default-FS
   // instance breaks when the table dir lives on a different filesystem
-  import graft.ops.DeltaProtocol.{fsOf, path}
+  import graft.ops.DeltaProtocol.{fsOf, markerId, path}
 
   /** Ids currently pinned by a savepoint marker. */
   def savepoints(spark: SparkSession, dir: String): Set[Long] = {
     val fs = fsOf(spark, dir)
     if (!fs.exists(path(dir))) Set.empty
     else fs.listStatus(path(dir)).map(_.getPath.getName)
-      .collect { case n if n.startsWith("_SAVEPOINT_") => n.stripPrefix("_SAVEPOINT_").toLong }
-      .toSet
+      .flatMap(markerId(_, "_SAVEPOINT_")).toSet
   }
 
   /** Pin committed version `id` against GC. False if `id` was never

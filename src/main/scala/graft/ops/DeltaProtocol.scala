@@ -43,6 +43,13 @@ private[graft] object DeltaProtocol {
 
   def path(s: String) = new org.apache.hadoop.fs.Path(s)
 
+  /** The id a `<prefix><id>` marker file name carries; None for every
+    * other name. A stray name under the prefix — a copy in progress
+    * such as `_COMMIT_7._COPYING_` — is not a marker, and must not turn
+    * every listing of the table into a NumberFormatException. */
+  def markerId(name: String, prefix: String): Option[Long] =
+    if (name.startsWith(prefix)) name.stripPrefix(prefix).toLongOption else None
+
   def markerExists(spark: SparkSession, dir: String, marker: String = "_INDEX"): Boolean =
     fsOf(spark, dir).exists(path(s"$dir/$marker"))
 

@@ -827,4 +827,122 @@ class FileGroupsSpec extends SparkSpec {
     }
     l.unpersist()
   }
+
+  /** Shuffle exchanges in an executed plan, counted through AQE's final
+    * plan, its query stages and the plans of cached relations (the
+    * commit writes from a persisted merge, so its exchange sits inside
+    * an InMemoryTableScan). */
+  private def shuffleExchanges(p: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    p match {
+      case a: AdaptiveSparkPlanExec => shuffleExchanges(a.executedPlan)
+      case q: QueryStageExec => shuffleExchanges(q.plan)
+      case m: InMemoryTableScanExec => shuffleExchanges(m.relation.cachedPlan)
+      case e: ShuffleExchangeLike => 1 + e.children.map(shuffleExchanges).sum
+      case other => other.children.map(shuffleExchanges).sum
+    }
+  }
+
+  test("a commit into existing groups runs one exchange, at most 5 jobs, one file per group") {
+    val dir = tmpDir("graft_fg_shape") + "/t"
+    val base = (0L until 400L).map(i => (i, i, "c", i.toDouble)).toDF("id", "lsn", "op", "value")
+    FileGroups.commit(spark, dir, base, 0L, Seq("id"), Seq("lsn"), nBuckets = 8)
+    // updates, a delete and an insert: existing groups go dirty
+    val batch = Seq((3L, 1000L, "u", -3.0), (77L, 1001L, "u", -77.0), (150L, 1002L, "d", 0.0),
+      (260L, 1003L, "u", -260.0), (999L, 1004L, "c", 999.0)).toDF("id", "lsn", "op", "value")
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (qe.executedPlan.treeString.contains("InsertIntoHadoopFsRelationCommand")) {
+          writes.add(qe.executedPlan); ()
+        }
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    val dirty =
+      try FileGroups.commit(spark, dir, batch, 1L, Seq("id"), Seq("lsn"))
+      finally {
+        org.apache.spark.ListenerBusDrain.drain(sc)
+        sc.removeSparkListener(jobListener)
+        spark.listenerManager.unregister(planListener)
+      }
+    assert(dirty.nonEmpty && dirty.size < 8, s"the batch must dirty some, not all, groups: $dirty")
+    assert(writes.size == 1, s"one data write per commit, saw ${writes.size}")
+    val plan = writes.peek()
+    info(s"${jobs.get} jobs, ${shuffleExchanges(plan)} shuffle exchange(s) in the write")
+    assert(jobs.get <= 5, s"a commit must run at most 5 jobs, ran ${jobs.get}")
+    assert(shuffleExchanges(plan) == 1, plan.treeString)
+    val fs = org.apache.hadoop.fs.FileSystem.get(sc.hadoopConfiguration)
+    dirty.foreach { b =>
+      val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/files/v1/_bucket=$b"))
+        .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"bucket $b: ${files.mkString(", ")}")
+    }
+    val got = FileGroups.read(spark, dir).get
+      .select($"id", $"lsn", $"op", $"value").orderBy($"id").collect().toSeq
+    val want = CdcMerge.snapshot(base.unionByName(batch), Seq("id"), Seq("lsn"))
+      .select($"id", $"lsn", $"op", $"value").orderBy($"id").collect().toSeq
+    assert(got == want)
+  }
+
+  test("a manifest without a #schema= header still commits through the schema-merge read") {
+    val dir = tmpDir("graft_fg_noschema") + "/t"
+    val l = log()
+    FileGroups.commit(spark, dir, l.filter($"lsn" < 500), 0L, Seq("id"), Seq("lsn"), nBuckets = 8)
+    // strip the header (a manifest written before it existed) through
+    // the Hadoop FS, so the checksum sidecar matches the edited bytes
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val mf = new org.apache.hadoop.fs.Path(s"$dir/manifest_v0.tsv")
+    val in = fs.open(mf)
+    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    assert(text.contains("#schema="))
+    val stripped = text.split("\n").filterNot(_.startsWith("#schema=")).mkString("\n")
+    val out = fs.create(mf, true)
+    try out.write(stripped.getBytes("UTF-8")) finally out.close()
+    val dirty = FileGroups.commit(spark, dir, l.filter($"lsn" >= 500), 1L, Seq("id"), Seq("lsn"))
+    assert(dirty.nonEmpty)
+    val got = FileGroups.read(spark, dir).get
+      .select($"id", $"lsn", $"op", $"value").orderBy($"id").collect().toSeq
+    val want = CdcMerge.snapshot(l, Seq("id"), Seq("lsn"))
+      .select($"id", $"lsn", $"op", $"value").orderBy($"id").collect().toSeq
+    assert(got == want)
+  }
+
+  test("a stray _COMMIT_ name (a copy in progress) is not a commit: head and read are unchanged") {
+    val dir = tmpDir("graft_fg_stray") + "/t"
+    val l = log()
+    FileGroups.commit(spark, dir, l.filter($"lsn" < 500), 0L, Seq("id"), Seq("lsn"), nBuckets = 8)
+    FileGroups.commit(spark, dir, l.filter($"lsn" >= 500 && $"lsn" < 800), 1L, Seq("id"), Seq("lsn"))
+    def rows() = FileGroups.read(spark, dir).get
+      .select($"id", $"lsn", $"op", $"value").orderBy($"id").collect().toSeq
+    val before = rows()
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    assert(fs.createNewFile(new org.apache.hadoop.fs.Path(s"$dir/_COMMIT_7._COPYING_")))
+    assert(FileGroups.committedId(spark, dir).contains(1L))
+    assert(Ingest.snapshotVersions(spark, dir) == Seq(0L, 1L))
+    assert(rows() == before)
+    // the other marker kinds a commit lists (purge intents, savepoints)
+    // skip stray names too: the next commit lands normally
+    Seq("_PURGE_9._COPYING_", "_SAVEPOINT_0._COPYING_").foreach(n =>
+      assert(fs.createNewFile(new org.apache.hadoop.fs.Path(s"$dir/$n"))))
+    assert(FileGroups.commit(spark, dir, l.filter($"lsn" >= 800), 2L, Seq("id"), Seq("lsn")).nonEmpty)
+    assert(FileGroups.committedId(spark, dir).contains(2L))
+    val want = CdcMerge.snapshot(l, Seq("id"), Seq("lsn"))
+      .select($"id", $"lsn", $"op", $"value").orderBy($"id").collect().toSeq
+    assert(rows() == want)
+  }
 }

@@ -448,4 +448,39 @@ class IncrementalStreamSpec extends SparkSpec {
     }
     assert(bad.getMessage.contains("must be an integer"), bad.getMessage)
   }
+
+  test("a table with two ordering columns, or a string one, fails loudly at the incremental doors") {
+    // both doors decide changed-since with one integer threshold on one
+    // ordering column; any other ordering must be refused, never read
+    val root = tmpDir("graft_istream_ord")
+    def streamError(t: String, ckpt: String): String = intercept[Exception] {
+      val q = spark.readStream.format("graft-cdc").option("startingVersion", 0).load(t)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch((_: DataFrame, _: Long) => ())
+        .start()
+      try { q.processAllAvailable(); q.awaitTermination(10); () } finally q.stop()
+    }.getMessage
+
+    val two = root + "/two"
+    val b0 = Seq((1L, 10L, 0L, "c", 1.0), (2L, 11L, 0L, "c", 2.0))
+      .toDF("id", "lsn", "seq", "op", "value")
+    val b1 = Seq((1L, 20L, 0L, "u", 1.5)).toDF("id", "lsn", "seq", "op", "value")
+    FileGroups.commit(spark, two, b0, 0L, Seq("id"), Seq("lsn", "seq"), nBuckets = 4)
+    FileGroups.commit(spark, two, b1, 1L, Seq("id"), Seq("lsn", "seq"))
+    spark.conf.set("spark.sql.catalog.graft_is_ord", classOf[FileGroupCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_is_ord.root", root)
+    val batchDoor = intercept[Exception] {
+      spark.read.option("startingVersion", 0).table("graft_is_ord.two").collect()
+    }
+    assert(batchDoor.getMessage.contains("needs exactly one ordering column"),
+      batchDoor.getMessage)
+    val streamDoor = streamError(two, s"$root/ckpt_two")
+    assert(streamDoor.contains("needs exactly one ordering column"), streamDoor)
+
+    val str = root + "/str"
+    val s0 = Seq((1L, "a", "c", 1.0), (2L, "b", "c", 2.0)).toDF("id", "ord", "op", "value")
+    FileGroups.commit(spark, str, s0, 0L, Seq("id"), Seq("ord"), nBuckets = 4)
+    val stringOrd = streamError(str, s"$root/ckpt_str")
+    assert(stringOrd.contains("integer-family ordering column"), stringOrd)
+  }
 }
