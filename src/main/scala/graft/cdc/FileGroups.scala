@@ -3,6 +3,7 @@ package graft.cdc
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -99,13 +100,19 @@ object FileGroups {
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong))
 
   /** The buckets `batch`'s rows hash into: ONE job and no exchange —
-    * each partition ORs its rows' buckets into an nBuckets-bit set, and
-    * the collected sets (≤ one per partition) are OR-ed locally. */
+    * each partition ORs its rows' buckets into a bit set, and the
+    * collected sets (≤ one per partition) are OR-ed locally. With
+    * `matching` (the batch carries [[MatchCol]]) the buckets of match
+    * rows come back apart, as the second set. */
   private def bucketsOf(sess: SparkSession, batch: DataFrame, keys: Seq[String],
-                        nBuckets: Int): Set[Long] = {
+                        nBuckets: Int, matching: Boolean): (Set[Long], Set[Long]) = {
     import sess.implicits._
     import scala.collection.{immutable, mutable}
-    batch.select(bucketCol(keys, nBuckets)).as[Long]
+    val bit =
+      if (!matching) bucketCol(keys, nBuckets)
+      else bucketCol(keys, nBuckets) + when(col(MatchCol).isNotNull, lit(nBuckets.toLong))
+        .otherwise(lit(0L))
+    batch.select(bit).as[Long]
       .mapPartitions { bs =>
         val seen = mutable.BitSet.empty
         bs.foreach(b => seen += b.toInt)
@@ -114,6 +121,36 @@ object FileGroups {
       .map(immutable.BitSet.fromBitMask)
       .foldLeft(immutable.BitSet.empty)(_ | _)
       .toSet[Int].map(_.toLong)
+      .partition(_ < nBuckets) match {
+        case (rows, matches) => (rows, matches.map(_ - nBuckets))
+      }
+  }
+
+  /** The column a MERGE batch carries so the commit checks the SQL
+    * MERGE guards inside its own write: NULL on the rows to merge; on a
+    * MATCH row — one per (target row, matching source row) pair, its
+    * key columns the target row's key, every other column NULL — 1, or
+    * 2 when that match's UPDATE assigns the ordering columns a value
+    * below the target row's. Match rows are never written. A batch
+    * carrying this column is checked by [[checkMatches]] after the data
+    * files are written and BEFORE the manifest and the marker; a
+    * violation discards the written files and leaves the table at its
+    * head. It is checked even when it has only match rows, which then
+    * publish nothing. */
+  private[graft] val MatchCol = "_graft_match"
+
+  /** The MERGE guards over a matching batch's write: `most` = the
+    * largest number of match rows one target row got, `regressed` =
+    * some match row is marked 2. */
+  private def checkMatches(ord: Seq[String], most: Long, regressed: Boolean): Unit = {
+    if (most > 1) throw new IllegalStateException(
+      "MERGE cardinality violation: a target row matched more than one " +
+        "source row — deduplicate the source on the join keys first")
+    if (regressed) throw new IllegalStateException(
+      s"MERGE UPDATE assigns ordering column(s) ${ord.mkString(", ")} a value " +
+        "below the matched target row's: latest-wins would keep the old row, " +
+        "silently dropping the update — assign a value at or above the " +
+        "current one (or commit a CDC batch with the intended ordering)")
   }
 
   private final case class Entry(bucket: Long, relPath: String,
@@ -127,9 +164,10 @@ object FileGroups {
     * geometry (4096 bits / 3 hashes ⇒ <0.1% FP at ~250 keys/group);
     * at 100 TB you size bits ∝ keys-per-file (Hudi's dynamic bloom) —
     * same math, per-entry `m` instead of a constant. The filter is
-    * BUILT DISTRIBUTEDLY: explode k seeds per key, OR the bit words in
-    * a (bucket, word) aggregation, and only the finished ≤ nBuckets ×
-    * 64-word bitsets reach the driver (index metadata, not data). */
+    * BUILT DISTRIBUTEDLY while the commit writes: each write task ORs
+    * its rows' k bit positions into per-bucket words, and only the
+    * finished ≤ nBuckets × 64-word bitsets reach the driver (index
+    * metadata, not data) — see [[writeGroups]]. */
   private val BloomBits = 4096L
   private val BloomWords = (BloomBits / 64).toInt
   private val BloomK = 3
@@ -143,10 +181,11 @@ object FileGroups {
   private def bloomPos(keyCols: Seq[Column], seed: Int) =
     pmod(xxhash64(keyCols :+ lit(seed): _*), lit(BloomBits))
 
-  // (the historical two-job bloom build — explode K positions →
-  // (bucket, word) bit_or → collect — was fused into rewriteEntries'
-  // single grouped aggregation in r21 via functions.BloomWordsAgg;
-  // the bits are the same order-invariant OR of the same positions)
+  // (history: the bloom was built by exploding K positions into a
+  // (bucket, word) bit_or, fused in r21 into one grouped aggregation
+  // over the persisted merge output, and now rides the write itself as
+  // an observed functions.FileGroupStatsAgg; each step ORs the same
+  // positions, so the manifest's bloom bits never changed)
 
   private def bloomMightContain(hex: String, positions: Seq[Long]): Boolean =
     positions.forall { p =>
@@ -361,9 +400,12 @@ object FileGroups {
     * batch that collects a ≤ nBuckets-bit set per partition (index
     * metadata, not data). The merge is [[CdcMerge]]'s law over
     * just the dirty buckets' rows, read at the manifest's schema, with
-    * ONE hash shuffle on the file group: its input is ∝ touched file
-    * groups, and each group lands whole in one task, which writes its
-    * one data file. */
+    * ONE exchange on the file group: its input is ∝ touched file
+    * groups, each group lands whole in one task, which writes its one
+    * data file, and the groups spread evenly over the tasks. The
+    * manifest entries (stats, key blooms, ord ceiling) are observed in
+    * those write tasks, so a commit is 3 jobs: discovery, the
+    * exchange's map stage, the write ([[writeGroups]]). */
   def commit(sess: SparkSession, dir: String, batch: DataFrame, batchId: Long,
              keys: Seq[String], ord: Seq[String], nBuckets: Int = 16): Set[Long] =
     commitOutcome(sess, dir, batch, batchId, keys, ord, nBuckets,
@@ -417,22 +459,26 @@ object FileGroups {
     val committed = committedId(sess, dir)
     if (committed.exists(_ >= batchId)) Replayed
     else {
-      val (nb, current, prevSchema, prevOrdHi) = committed match {
-        case Some(id) =>
-          val m = readManifest(sess, dir, id)
-          checkKeys(m, keys, dir)
-          checkOrd(m, ord, dir)
-          (m.nBuckets, m.entries, m.schema, m.ordHi)
-        case None => (nBuckets, Seq.empty[Entry], None, None)
+      val prev = committed.map { id =>
+        val m = readManifest(sess, dir, id)
+        checkKeys(m, keys, dir)
+        checkOrd(m, ord, dir)
+        m
       }
-      // persisted across the bucket-discovery and merge jobs so the
+      val nb = prev.fold(nBuckets)(_.nBuckets)
+      val current = prev.fold(Seq.empty[Entry])(_.entries)
+      // persisted across the bucket-discovery and write jobs so the
       // batch plan (often a windowed snapshot scan or a routed join)
-      // computes ONCE; the discovery doubles as the emptiness probe —
-      // dirty is empty iff the batch has no rows
+      // computes ONCE — the commit's only cache; the discovery doubles
+      // as the emptiness probe: dirty is empty iff no row is to merge
       batch.persist()
       try {
-      val dirty = bucketsOf(sess, batch, keys, nb)
-      if (dirty.isEmpty && !allowEmpty)
+      // a MERGE batch ([[MatchCol]]) is the one whose write also
+      // counts, per target row, its match rows: they share its key, so
+      // the write's exchange groups them with it
+      val matching = batch.columns.contains(MatchCol)
+      val (dirty, matched) = bucketsOf(sess, batch, keys, nb, matching)
+      if (dirty.isEmpty && matched.isEmpty && !allowEmpty)
         // a rowless batch publishes NO version: an empty commit would
         // still bump the head, and a re-run no-op statement (idempotent
         // MERGE/DELETE retries are common) would silently age real
@@ -440,43 +486,51 @@ object FileGroups {
         return Committed(Set.empty)
       val existingDirty = current.filter(e => dirty.contains(e.bucket))
       // ONE multi-path scan over the dirty buckets (a per-bucket read
-      // would launch a job per file group), typed by the schema the
-      // manifest pins: columns a bucket's files lack read as typed
-      // NULLs, and no footer-reading schema-merge job runs. Only a
-      // manifest without a #schema= header still needs mergeSchema.
-      val reader = prevSchema match {
-        case Some(st) => sess.read.schema(st)
-        case None => sess.read.option("mergeSchema", "true")
-      }
-      val existing =
-        if (existingDirty.isEmpty) None
-        else Some(reader.parquet(existingDirty.map(e => s"$dir/${e.relPath}"): _*))
-      val (log, order) = existing match {
-        case Some(t) => (CdcMerge.unionLog(t, batch), ord :+ CdcMerge.SrcCol)
+      // would launch a job per file group), typed by the manifest schema
+      val (log, order) = prev.filter(_ => existingDirty.nonEmpty) match {
+        case Some(m) =>
+          (CdcMerge.unionLog(scanGroups(sess, dir, m, existingDirty), batch),
+            ord :+ CdcMerge.SrcCol)
         case None => (batch, ord)
       }
-      // ONE exchange: the union log hash-partitioned by _bucket. The
-      // latest-wins window runs on (_bucket, keys), which that
-      // partitioning already satisfies (_bucket is a function of the
-      // keys), and every bucket lands whole in one task — so the
-      // dynamic-partitioned write emits one compact file per file group
-      // (the manifest's Entry is the bucket dir; the Iceberg
-      // write.distribution-mode=hash shape) without a second shuffle.
-      // The partition count is the session's (AQE may coalesce it).
-      // Persisted across the write and the stats pass so the merge runs
-      // once, not twice.
-      val out = CdcMerge.snapshot(
-          log.withColumn("_bucket", bucketCol(keys, nb)).repartition(col("_bucket")),
-          "_bucket" +: keys, order)
-        .drop(CdcMerge.SrcCol).persist()
-      out.write.mode("overwrite").partitionBy("_bucket").parquet(s"$dir/files/v$batchId")
-      // per-bucket stats + key blooms ([[rewriteEntries]]): blooms for
-      // ANY key shape, [lo,hi] stats additionally for single
-      // integer-family keys. A bucket merged to EMPTY (every key
-      // deleted) yields no stats row, writes no partition dir, and
-      // simply leaves the manifest.
-      val (stats, dirtyOrdHi) = rewriteEntries(out, keys, batchId, ord)
-      out.unpersist()
+      // the latest-wins window runs on (_bucket, _pid, keys), which the
+      // write's one exchange already satisfies (both are functions of
+      // the keys); a bucket merged to EMPTY (every key deleted) writes
+      // no partition dir, yields no entry, and simply leaves the manifest
+      val part = Seq("_bucket", "_pid") ++ keys
+      val guard = Option.when(matching)(org.apache.spark.sql.Observation())
+      val (stats, dirtyOrdHi, written) = writeGroups(sess, log, dir, batchId, keys, ord,
+          nb, dirty ++ matched)(placed => guard match {
+        case None => CdcMerge.snapshot(placed, part, order).drop(CdcMerge.SrcCol)
+        case Some(obs) =>
+          // match rows sort after every row to merge (`_real` desc), so
+          // latest-wins never picks one over a real row, and the
+          // dropped ones are counted per target row first
+          val real = "_real" +: order
+          val all = Window.partitionBy(part.map(col): _*)
+            .orderBy(real.map(c => col(c).desc): _*)
+            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+          CdcMerge.snapshot(
+              placed.withColumn("_real", col(MatchCol).isNull)
+                .withColumn("_matches", count(col(MatchCol)).over(all))
+                .observe(obs, max(col("_matches")).as("most"), max(col(MatchCol)).as("code")),
+              part, real)
+            .filter(col("_real"))
+            .drop(CdcMerge.SrcCol, "_real", "_matches", MatchCol)
+      })
+      guard.foreach { obs =>
+        val r = observed(obs)
+        try checkMatches(ord, if (r.isNullAt(0)) 0L else r.getLong(0),
+          !r.isNullAt(1) && r.getInt(1) == 2)
+        catch { case e: Throwable => fs.delete(path(s"$dir/files/v$batchId"), true); throw e }
+      }
+      if (dirty.isEmpty && !allowEmpty) {
+        // match rows only: checked, nothing to publish
+        fs.delete(path(s"$dir/files/v$batchId"), true)
+        return Committed(Set.empty)
+      }
+      val prevOrdHi = prev.flatMap(_.ordHi)
+      val prevSchema = prev.flatMap(_.schema)
       val entries = current.filterNot(e => dirty.contains(e.bucket)) ++ stats
       // the version's ord ceiling (see writeManifest's #ordhi note):
       // surviving dirty rows' max joined with the prior ceiling (the
@@ -499,7 +553,7 @@ object FileGroups {
       // the next unrelated commit
       // (the data is still there — mergeSchema reads would see it, the
       // manifest-typed catalog scan would not)
-      writeManifest(sess, dir, batchId, nb, widenWith(out.drop("_bucket").schema, prevSchema),
+      writeManifest(sess, dir, batchId, nb, widenWith(written, prevSchema),
         keys, ord, entries, ordHi)
       // the marker is the atomic publish point; createNewFile returning
       // false means ANOTHER PROCESS published this id between our head
@@ -610,16 +664,21 @@ object FileGroups {
       before.filterNot(after.contains)
     })
 
-  /** Typed-NULL pad of manifest-schema columns no scanned data file
-    * carries yet (a schema-widening DDL commit adds columns by
-    * metadata alone) — applied by every Scala-door read so its schema
-    * matches the SQL door's manifest-typed scan, which null-fills
-    * missing parquet columns natively. */
-  private def padToSchema(df: DataFrame, schema: Option[StructType]): DataFrame =
-    schema.fold(df) { st =>
-      st.fields.filterNot(f => df.columns.exists(_.equalsIgnoreCase(f.name)))
-        .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+  /** ONE multi-path scan of file groups `entries` of the version `m`
+    * describes, typed by the manifest's `#schema=`: columns a group's
+    * files lack (clean-bucket drift, a schema-widening DDL commit) read
+    * as typed NULLs, the SQL door's manifest-typed scan shape, and no
+    * footer-reading schema-merge job runs; no entries is an empty scan
+    * of that schema. Only a manifest without that header still needs
+    * `mergeSchema`. */
+  private def scanGroups(sess: SparkSession, dir: String, m: TableMeta,
+                         entries: Seq[Entry]): DataFrame = {
+    val paths = entries.map(e => s"$dir/${e.relPath}")
+    m.schema match {
+      case Some(st) => sess.read.schema(st).parquet(paths: _*)
+      case None => sess.read.option("mergeSchema", "true").parquet(paths: _*).drop("_bucket")
     }
+  }
 
   /** `base`'s fields plus every prior-schema field `base` lacks
     * (case-insensitive): the widening reconcile commit() applies to
@@ -686,8 +745,9 @@ object FileGroups {
   })
 
   /** Read the current snapshot: every manifest-referenced bucket dir in
-    * one multi-path scan (mergeSchema reconciles buckets written under
-    * drifted schemas). None before the first commit. */
+    * one multi-path scan typed by the manifest schema (mergeSchema
+    * reconciles buckets only behind a manifest without one). None
+    * before the first commit. */
   def read(sess: SparkSession, dir: String): Option[DataFrame] =
     committedId(sess, dir).flatMap(readAt(sess, dir, _))
 
@@ -711,11 +771,7 @@ object FileGroups {
         m.schema.fold(sess.emptyDataFrame) { st =>
           sess.createDataFrame(sess.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
         }
-      else padToSchema(
-        sess.read.option("mergeSchema", "true")
-          .parquet(m.entries.map(e => s"$dir/${e.relPath}"): _*)
-          .drop("_bucket"),
-        m.schema)
+      else scanGroups(sess, dir, m, m.entries)
     }
   }
 
@@ -958,52 +1014,69 @@ object FileGroups {
     else ps.map(p => keys.zip(p.vals).map { case (k, v) => col(k) === lit(v) }
       .reduce(_ && _)).reduce(_ || _)
 
-  /** Per-bucket manifest entries for a freshly rewritten version dir
-    * (shared by [[commit]] and the purge rewrite): ONE narrow agg pass
-    * for [lo,hi,count] — [lo,hi] populated only for single
-    * integer-family keys, the stats-index scope — plus the distributed
-    * key blooms, built for ANY key shape. */
-  /** Per-bucket index entries for the rewritten file groups, plus the
-    * rewritten rows' ORD CEILING (max ordering value across every
-    * bucket — rides the same grouped aggregation, no extra pass; None
-    * unless the table has a single integer-family ordering column or
-    * the rewrite emitted no rows). */
-  private def rewriteEntries(out: DataFrame, keys: Seq[String], batchId: Long,
-                             ord: Seq[String] = Nil): (Seq[Entry], Option[Long]) = {
-    val singleIntKey = keys.size == 1 &&
-      fieldOf(out.schema, keys.head).exists(f => integerFamily(f.dataType))
-    val statCol = if (singleIntKey) col(keys.head).cast("long") else lit(null).cast("long")
-    val singleIntOrd = ord.size == 1 &&
-      fieldOf(out.schema, ord.head).exists(f => integerFamily(f.dataType))
-    val ordCol = if (singleIntOrd) col(ord.head).cast("long") else lit(null).cast("long")
-    // r21 (guide §1.2/§2.4): stats AND key blooms in ONE grouped
-    // aggregation — the historical shape ran a second job over the
-    // persisted merge output (explode K positions → (bucket, word)
-    // bit_or → collect) per commit. BloomWordsAgg ORs the same K
-    // codegen'd xxhash64 positions into a 64-word buffer inline, so
-    // every commit pays one index pass, not two; the OR is
-    // order-invariant, so the sketch bits are unchanged.
-    val posArr = array((0 until BloomK).map(i => bloomPos(keys.map(col), i)): _*)
-    val rows = out.groupBy(col("_bucket"))
-      .agg(min(statCol).as("lo"), max(statCol).as("hi"), count(lit(1)).as("n"),
-        max(ordCol).as("ordhi"),
-        graft.functions.BloomWordsAgg.agg(posArr, BloomWords).as("bloom"))
-      .collect()
-    val entries = rows.map { r =>
-      val bloomHex = ByteBuffer.wrap(r.getAs[Array[Byte]](5)).asLongBuffer() match {
-        case lb =>
-          val arr = new Array[Long](BloomWords)
-          lb.get(arr)
-          arr.map(w => f"$w%016x").mkString
-      }
+  /** The ONE write of a rewrite ([[commit]] and the purge): route
+    * `rows` to their file groups, `collapse` them within each group,
+    * write version `batchId`'s bucket dirs, and return the groups'
+    * manifest entries, the written rows' ORD CEILING (None unless the
+    * table has a single integer-family ordering column and a row was
+    * written) and the written schema.
+    *
+    * Placement: each bucket in `groups` (the buckets `rows` hash
+    * into) gets a dense id, and bucket `b`'s rows go to write task
+    * `_pid` = dense(b) mod n, n = min(|groups|, the session's shuffle
+    * partitions), through ONE `repartitionById` exchange. Every group
+    * thus lands whole in one task, which writes its one data file, and
+    * the groups spread evenly over the tasks (a hash of 16 buckets over
+    * 4 partitions lands 6/6/3/1). `collapse` may window on (_bucket,
+    * _pid, keys): that clustering contains `_pid`, so the exchange
+    * satisfies it, and leading with `_bucket` keeps the window's sort
+    * usable as the partitioned write's.
+    *
+    * Entries: lo/hi/count, the key bloom and the ord ceiling ride the
+    * write itself as an observed [[graft.functions.FileGroupStatsAgg]]
+    * above the exchange, so they are computed in the write's result
+    * tasks (each task's accumulator update is applied exactly once) and
+    * no second pass over the written rows runs. [lo,hi] is populated
+    * only for single integer-family keys (the stats-index scope); the
+    * bloom covers ANY key shape. A group collapsed to no rows writes no
+    * dir and yields no entry. */
+  private def writeGroups(sess: SparkSession, rows: DataFrame, dir: String, batchId: Long,
+                          keys: Seq[String], ord: Seq[String], nb: Int, groups: Set[Long])
+                         (collapse: DataFrame => DataFrame): (Seq[Entry], Option[Long], StructType) = {
+    val n = math.max(1, math.min(groups.size,
+      sess.conf.get("spark.sql.shuffle.partitions").toInt))
+    val pid = Array.tabulate(nb)(_ % n)
+    groups.toSeq.sorted.zipWithIndex.foreach { case (b, i) => pid(b.toInt) = i % n }
+    val out = collapse(rows.withColumn("_bucket", bucketCol(keys, nb))
+        .withColumn("_pid", element_at(typedLit(pid.toSeq), col("_bucket").cast("int") + 1))
+        .repartitionById(n, col("_pid")))
+      .drop("_pid")
+    def singleInt(cs: Seq[String]) = cs.size == 1 &&
+      fieldOf(out.schema, cs.head).exists(f => integerFamily(f.dataType))
+    def longOf(cs: Seq[String]) =
+      if (singleInt(cs)) col(cs.head).cast("long") else lit(null).cast("long")
+    val obs = org.apache.spark.sql.Observation()
+    out.withColumn("_pos", array((0 until BloomK).map(i => bloomPos(keys.map(col), i)): _*))
+      .observe(obs, graft.functions.FileGroupStatsAgg.agg(col("_bucket"), longOf(keys),
+        longOf(ord), col("_pos"), nb, BloomWords).as("groups"))
+      .drop("_pos")
+      .write.mode("overwrite").partitionBy("_bucket").parquet(s"$dir/files/v$batchId")
+    val observedGroups = observed(obs).getSeq[Row](0)
+    val entries = observedGroups.map { r =>
+      val lb = ByteBuffer.wrap(r.getAs[Array[Byte]](5)).asLongBuffer()
+      val bloomHex = Array.fill(BloomWords)(lb.get()).map(w => f"$w%016x").mkString
       Entry(r.getLong(0), s"files/v$batchId/_bucket=${r.getLong(0)}",
         if (r.isNullAt(1)) None else Some(r.getLong(1)),
         if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getLong(3),
         Some(bloomHex))
-    }.toSeq
-    val ordHi = rows.toSeq.collect { case r if !r.isNullAt(4) => r.getLong(4) }.maxOption
-    (entries, ordHi)
+    }
+    val ordHi = observedGroups.collect { case r if !r.isNullAt(4) => r.getLong(4) }.maxOption
+    (entries, ordHi, out.drop("_bucket").schema)
   }
+
+  /** The metrics `obs` saw in a query that has run. */
+  private def observed(obs: org.apache.spark.sql.Observation): Row =
+    scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration(5, "min"))
 
   /** Point lookup by key TUPLE — string and composite record keys
     * included: resolve each probed tuple's hash bucket, drop buckets
@@ -1032,15 +1105,11 @@ object FileGroups {
       // its stats + key bloom — a negative probe costs zero data-file
       // IO (the bloom-index read path)
       val hit = m.entries.filter(e => ps.exists(admits(e)))
-      if (hit.isEmpty) readAt(sess, dir, id).get.limit(0)
-      // same widened-column null-pad as readAt, so a lookup's schema
-      // doesn't depend on whether any file group survived pruning
-      else padToSchema(
-        sess.read.option("mergeSchema", "true")
-          .parquet(hit.map(e => s"$dir/${e.relPath}"): _*)
-          .drop("_bucket")
-          .filter(tupleMatch(keys, ps)),
-        m.schema)
+      // same manifest-typed scan as readAt, so a lookup's schema doesn't
+      // depend on whether any file group survived pruning; with none
+      // surviving, no data file (or footer) is touched at all
+      if (hit.isEmpty && m.schema.isEmpty) readAt(sess, dir, id).get.limit(0)
+      else scanGroups(sess, dir, m, hit).filter(tupleMatch(keys, ps))
     }
   }
 
@@ -1176,18 +1245,10 @@ object FileGroups {
         // DEFINITELY matches a purged tuple — a null key column makes
         // the equality null, and such a row is not a purge target (the
         // probe values are non-null by contract), so it survives
-        val kept = sess.read.option("mergeSchema", "true")
-          .parquet(dirtyBuckets.map(e => s"$dir/${e.relPath}"): _*)
+        val kept = scanGroups(sess, dir, m, dirtyBuckets)
           .filter(!coalesce(tupleMatch(keys, probes), lit(false)))
-          .withColumn("_bucket", bucketCol(keys, nb))
-          // one compact file per rewritten file group: without the
-          // exchange every upstream task writes one file per bucket it
-          // happens to hold (tasks × buckets small files)
-          .repartition(nb, col("_bucket")).persist()
-        kept.write.mode("overwrite").partitionBy("_bucket").parquet(s"$dir/files/v$batchId")
-        val (stats, _) = rewriteEntries(kept, keys, batchId)
-        kept.unpersist()
         val dirtySet = dirtyBuckets.map(_.bucket).toSet
+        val (stats, _, _) = writeGroups(sess, kept, dir, batchId, keys, Nil, nb, dirtySet)(identity)
         entries.filterNot(e => dirtySet.contains(e.bucket)) ++ stats
       }
     writeManifest(sess, dir, batchId, nb,

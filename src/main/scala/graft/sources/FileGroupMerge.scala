@@ -51,8 +51,10 @@ import graft.cdc.FileGroups
   * Hudi/Delta merges pay; the write side then rewrites only the file
   * groups the change batch's keys hash into. The SQL-standard
   * cardinality guard (a target row matched by >1 source rows is an
-  * error, not a double-update) costs one aggregation over the matched
-  * keys — batch-sized, not table-sized.
+  * error, not a double-update) and the ordering guard ride that
+  * commit's write: one match row per matched pair, counted per target
+  * row where the write's exchange already groups it — batch-sized, and
+  * no job of its own.
   */
 class FileGroupMergeRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -388,18 +390,10 @@ case class FileGroupMergeCommand(
     val committed = FileGroupMergeCommand.resolvedCommitted(session, dir, version, "MERGE")
     val src = org.apache.spark.sql.classic.GraftPlanBuilder.ofRows(session, source)
     val tgt = org.apache.spark.sql.classic.GraftPlanBuilder.ofRows(session, target)
-    // persisted: the cardinality guard and the change-batch
-    // materialization would otherwise each execute the source⋈snapshot
-    // join from scratch
+    // not persisted: the join runs once, inside the commit's persisted
+    // batch — the statement's only cache
     val joined = src.join(tgt.withColumn(MatchedCol, lit(true)),
-      Bridge.column(condition), "left_outer").persist()
-    try {
-      runOnJoined(session, committed, joined)
-    } finally { joined.unpersist(); () }
-  }
-
-  private def runOnJoined(session: SparkSession, committed: Long,
-                          joined: org.apache.spark.sql.DataFrame): Seq[Row] = {
+      Bridge.column(condition), "left_outer")
     val tgtAttrs = target.output
     val resolver = session.sessionState.conf.resolver
 
@@ -413,7 +407,6 @@ case class FileGroupMergeCommand(
     val routedAll = joined
       .withColumn(ActionCol, when(col(MatchedCol) === true, route(matchedActions, 0))
         .otherwise(route(notMatchedActions, NotMatchedBase)))
-    val routed = routedAll.filter(col(ActionCol).isNotNull)
 
     def assigned(assigns: Seq[Assignment], tAttr: Attribute): Option[Expression] =
       assigns.collectFirst {
@@ -433,58 +426,55 @@ case class FileGroupMergeCommand(
     }
     val coded = matchedActions.zipWithIndex ++
       notMatchedActions.zipWithIndex.map { case (a, i) => (a, NotMatchedBase + i) }
+    val batchCols = tgtAttrs.map { tAttr =>
+      coded.foldRight(lit(null).cast(tAttr.dataType)) { case ((a, code), els) =>
+        when(col(ActionCol) === code, valueFor(a, tAttr)).otherwise(els)
+      }.cast(tAttr.dataType).as(tAttr.name)
+    }
+    if (matchedActions.isEmpty) {
+      FileGroupMergeCommand.commitNonEmpty(session, dir,
+        routedAll.filter(col(ActionCol).isNotNull).select(batchCols: _*),
+        committed + 1, keys, ord)
+      return Seq.empty
+    }
 
-    // The two semantic guards, ONE job over the persisted join (the
-    // hot path already pays the emptiness probe + commit's two passes;
-    // a third and fourth scan for the guards measured ~1 s on the
-    // bench query):
+    // The two semantic guards ride the commit's own write (no job of
+    // their own): every matched (target row, source row) pair adds a
+    // MATCH row keyed by the target row's key (FileGroups.MatchCol),
+    // the write's exchange groups them with the target row, and the
+    // commit fails the statement on a violation before it publishes
+    // (FileGroups.checkMatches throws the two messages).
     //  - SQL-standard cardinality: one target row, one source match.
     //  - Ordering regression (the UPDATE-statement guard's MERGE
     //    twin): an UPDATE clause assigning the ordering column a value
     //    below the matched target row's would lose latest-wins — the
     //    merge would commit and report success while the snapshot kept
     //    the old row. Only update clauses that assign an ord column
-    //    contribute a predicate.
-    if (matchedActions.nonEmpty) {
-      val keyAttrs = keys.map(k => tgtAttrs.find(a => resolver(a.name, k)).getOrElse(
-        throw new IllegalStateException(s"record key '$k' not in target schema")))
-      val ordAttrs = ord.flatMap(o => tgtAttrs.find(a => resolver(a.name, o)))
-      val ordRegressed = coded.collect {
-        case (UpdateAction(_, assigns, _), code)
-            if ordAttrs.exists(assigned(assigns, _).isDefined) =>
-          // coalesce(_, true): a NULL assigned ord value must count as
-          // a violation (the null-ord row loses the NULLS-LAST desc
-          // collapse), not null out the predicate and slip through
-          (col(ActionCol) === code) &&
-            coalesce(struct(ordAttrs.map(a => assigned(assigns, a)
-              .map(Bridge.column).getOrElse(Bridge.column(a))): _*)
-              < struct(ordAttrs.map(Bridge.column(_)): _*), lit(true))
-      }
-      val regress = if (ordRegressed.nonEmpty) ordRegressed.reduce(_ || _) else lit(false)
-      val viol = routedAll.filter(col(MatchedCol))
-        .groupBy(keyAttrs.map(Bridge.column(_)): _*)
-        .agg(count(lit(1)).as("_graft_matches"),
-          max(when(regress, 1).otherwise(0)).as("_graft_regressed"))
-        .filter(col("_graft_matches") > 1 || col("_graft_regressed") === 1)
-        .limit(1).collect()
-      viol.headOption.foreach { r =>
-        if (r.getAs[Long]("_graft_matches") > 1) throw new IllegalStateException(
-          "MERGE cardinality violation: a target row matched more than one " +
-            "source row — deduplicate the source on the join keys first")
-        else throw new IllegalStateException(
-          s"MERGE UPDATE assigns ordering column(s) ${ord.mkString(", ")} a value " +
-            "below the matched target row's: latest-wins would keep the old row, " +
-            "silently dropping the update — assign a value at or above the " +
-            "current one (or commit a CDC batch with the intended ordering)")
-      }
+    //    contribute a predicate; such a match row is marked 2.
+    val keyAttrs = keys.map(k => tgtAttrs.find(a => resolver(a.name, k)).getOrElse(
+      throw new IllegalStateException(s"record key '$k' not in target schema")))
+    val ordAttrs = ord.flatMap(o => tgtAttrs.find(a => resolver(a.name, o)))
+    val ordRegressed = coded.collect {
+      case (UpdateAction(_, assigns, _), code)
+          if ordAttrs.exists(assigned(assigns, _).isDefined) =>
+        // coalesce(_, true): a NULL assigned ord value must count as
+        // a violation (the null-ord row loses the NULLS-LAST desc
+        // collapse), not null out the predicate and slip through
+        (col(ActionCol) === code) &&
+          coalesce(struct(ordAttrs.map(a => assigned(assigns, a)
+            .map(Bridge.column).getOrElse(Bridge.column(a))): _*)
+            < struct(ordAttrs.map(Bridge.column(_)): _*), lit(true))
     }
-    val batchCols = tgtAttrs.map { tAttr =>
-      coded.foldRight(lit(null).cast(tAttr.dataType)) { case ((a, code), els) =>
-        when(col(ActionCol) === code, valueFor(a, tAttr)).otherwise(els)
-      }.as(tAttr.name)
-    }
+    val regress = if (ordRegressed.nonEmpty) ordRegressed.reduce(_ || _) else lit(false)
+    val rowToMerge = when(col(ActionCol).isNotNull,
+      struct(batchCols :+ lit(null).cast("int").as(FileGroups.MatchCol): _*))
+    val matchRow = when(col(MatchedCol) === true,
+      struct(tgtAttrs.map { a =>
+        (if (keyAttrs.contains(a)) Bridge.column(a) else lit(null).cast(a.dataType)).as(a.name)
+      } :+ when(regress, 2).otherwise(1).as(FileGroups.MatchCol): _*))
     FileGroupMergeCommand.commitNonEmpty(session, dir,
-      routed.select(batchCols: _*), committed + 1, keys, ord)
+      routedAll.select(inline(array_compact(array(rowToMerge, matchRow)))),
+      committed + 1, keys, ord)
     Seq.empty
   }
 }

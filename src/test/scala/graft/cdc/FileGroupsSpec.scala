@@ -3,6 +3,7 @@ package graft.cdc
 import graft.SparkSpec
 import graft.tables.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** File-group COW: only touched buckets rewrite, everything else
   * carries forward by manifest reference, and the merged view always
@@ -853,40 +854,18 @@ class FileGroupsSpec extends SparkSpec {
     val batch = Seq((3L, 1000L, "u", -3.0), (77L, 1001L, "u", -77.0), (150L, 1002L, "d", 0.0),
       (260L, 1003L, "u", -260.0), (999L, 1004L, "c", 999.0)).toDF("id", "lsn", "op", "value")
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    var dirty = Set.empty[Long]
+    val seen = graft.SparkProbe(spark) {
+      dirty = FileGroups.commit(spark, dir, batch, 1L, Seq("id"), Seq("lsn"))
     }
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
-    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        if (qe.executedPlan.treeString.contains("InsertIntoHadoopFsRelationCommand")) {
-          writes.add(qe.executedPlan); ()
-        }
-      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain.drain(sc)
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    val dirty =
-      try FileGroups.commit(spark, dir, batch, 1L, Seq("id"), Seq("lsn"))
-      finally {
-        org.apache.spark.ListenerBusDrain.drain(sc)
-        sc.removeSparkListener(jobListener)
-        spark.listenerManager.unregister(planListener)
-      }
+    val writes = seen.plans.filter(_.treeString.contains("InsertIntoHadoopFsRelationCommand"))
     assert(dirty.nonEmpty && dirty.size < 8, s"the batch must dirty some, not all, groups: $dirty")
     assert(writes.size == 1, s"one data write per commit, saw ${writes.size}")
-    val plan = writes.peek()
-    info(s"${jobs.get} jobs, ${shuffleExchanges(plan)} shuffle exchange(s) in the write")
-    assert(jobs.get <= 5, s"a commit must run at most 5 jobs, ran ${jobs.get}")
+    val plan = writes.head
+    info(s"${seen.jobs} jobs, ${shuffleExchanges(plan)} shuffle exchange(s) in the write")
+    assert(seen.jobs <= 5, s"a commit must run at most 5 jobs, ran ${seen.jobs}")
     assert(shuffleExchanges(plan) == 1, plan.treeString)
-    val fs = org.apache.hadoop.fs.FileSystem.get(sc.hadoopConfiguration)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     dirty.foreach { b =>
       val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/files/v1/_bucket=$b"))
         .map(_.getPath.getName).filter(_.endsWith(".parquet"))
@@ -944,5 +923,158 @@ class FileGroupsSpec extends SparkSpec {
     val want = CdcMerge.snapshot(l, Seq("id"), Seq("lsn"))
       .select($"id", $"lsn", $"op", $"value").orderBy($"id").collect().toSeq
     assert(rows() == want)
+  }
+
+  test("a stream commit into existing groups runs exactly 3 jobs") {
+    val dir = tmpDir("graft_fg_stream3") + "/t"
+    val base = (0L until 400L).map(i => (i, i, "c", i.toDouble)).toDF("id", "lsn", "op", "value")
+    FileGroups.commit(spark, dir, base, 0L, Seq("id"), Seq("lsn"), nBuckets = 8)
+    val batch = Seq((3L, 1000L, "u", -3.0), (150L, 1002L, "d", 0.0), (999L, 1004L, "c", 999.0))
+      .toDF("id", "lsn", "op", "value")
+    var dirty = Set.empty[Long]
+    val seen = graft.SparkProbe(spark) {
+      dirty = FileGroups.commitStreamBatch(spark, dir, batch, 0L, Seq("id"), Seq("lsn"))
+    }
+    assert(dirty.nonEmpty)
+    // bucket discovery, the exchange's map stage, the write
+    assert(seen.jobs == 3, seen.jobStages.mkString("\n"))
+  }
+
+  /** Version `id`'s manifest lines: bucket -> (lo, hi, count, bloom hex)
+    * as the file spells them, and the `#ordhi` header. */
+  private def manifestLines(dir: String, id: Long): (Map[Long, Seq[String]], Option[Long]) = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/manifest_v$id.tsv"))
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    val ordHi = lines.collectFirst { case h if h.startsWith("#ordhi=") =>
+      h.stripPrefix("#ordhi=").toLong }
+    val entries = lines.filterNot(l => l.isEmpty || l.startsWith("#")).map { l =>
+      val f = l.split("\t", -1)
+      f(0).toLong -> Seq(f(2), f(3), f(4), f(5))
+    }.toMap
+    (entries, ordHi)
+  }
+
+  /** The same lines recomputed by a `groupBy(_bucket)` over the files
+    * version `id` references: [lo,hi] only for a single integer key,
+    * the bloom by the historical exploded (bucket, word) `bit_or`. */
+  private def recomputed(dir: String, id: Long, keys: Seq[String], nb: Int,
+                         intKey: Boolean): (Map[Long, Seq[String]], Option[Long]) = {
+    val df = FileGroups.readAt(spark, dir, id).get
+      .withColumn("_b", pmod(xxhash64(keys.map(col): _*), lit(nb.toLong)))
+    val stat = if (intKey) col(keys.head).cast("long") else lit(null).cast("long")
+    val stats = df.groupBy($"_b").agg(min(stat), max(stat), count(lit(1)))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    val pos = explode(array((0 until 3).map(i =>
+      pmod(xxhash64(keys.map(col) :+ lit(i): _*), lit(4096L))): _*)).as("pos")
+    val words = df.select($"_b", pos)
+      .selectExpr("_b", "CAST(pos / 64 AS INT) AS w",
+        "shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)) AS m")
+      .groupBy($"_b", $"w").agg(expr("bit_or(m)"))
+      .collect().groupBy(_.getLong(0))
+    val entries = stats.map { case (b, r) =>
+      val arr = Array.fill(64)(0L)
+      words(b).foreach(w => arr(w.getInt(1)) = w.getLong(2))
+      def opt(i: Int) = if (r.isNullAt(i)) "" else r.getLong(i).toString
+      b -> Seq(opt(1), opt(2), r.getLong(3).toString, arr.map(w => f"$w%016x").mkString)
+    }
+    val ordHi = df.agg(max($"lsn")).collect().head
+    (entries, if (ordHi.isNullAt(0)) None else Some(ordHi.getLong(0)))
+  }
+
+  test("observed manifest entries equal a groupBy(_bucket) recomputation over the written files") {
+    // int, string and composite keys; lsn rises across commits and the
+    // max-lsn row survives, so #ordhi is the version's max lsn
+    val shapes = Seq(
+      ("int", Seq("id"), (i: Long) => Seq(i), Seq(StructField("id", LongType))),
+      ("string", Seq("id"), (i: Long) => Seq(s"u$i"), Seq(StructField("id", StringType))),
+      ("composite", Seq("id", "region"), (i: Long) => Seq[Any](i / 3, (i % 3).toInt),
+        Seq(StructField("id", LongType), StructField("region", IntegerType))))
+    shapes.foreach { case (name, keys, keyOf, keyFields) =>
+      val dir = tmpDir(s"graft_fg_obs_$name") + "/t"
+      val schema = StructType(keyFields ++ Seq(StructField("lsn", LongType),
+        StructField("op", StringType), StructField("value", DoubleType)))
+      def rows(xs: Seq[(Long, Long, String)]) = spark.createDataFrame(
+        spark.sparkContext.parallelize(xs.map { case (i, lsn, op) =>
+          org.apache.spark.sql.Row.fromSeq(keyOf(i) ++ Seq(lsn, op, i.toDouble)) }), schema)
+      val nb = 8
+      FileGroups.commit(spark, dir, rows((0L until 300L).map(i => (i, i, "c"))), 0L,
+        keys, Seq("lsn"), nBuckets = nb)
+      // every key of one bucket deleted: that group merges to empty
+      val bucketOf = FileGroups.read(spark, dir).get
+        .select(pmod(xxhash64(keys.map(col): _*), lit(nb.toLong)).as("b"), col("value"))
+        .as[(Long, Double)].collect()
+      val emptied = bucketOf.head._1
+      val deletes = bucketOf.collect { case (b, v) if b == emptied => (v.toLong, 500L, "d") }
+      val kept = bucketOf.collect { case (b, v) if b != emptied => v.toLong }
+      FileGroups.commit(spark, dir, rows(deletes.toSeq ++
+        Seq((kept.head, 600L, "u"), (kept.last, 700L, "u"))), 1L, keys, Seq("lsn"))
+      for (v <- Seq(0L, 1L)) {
+        val (got, gotOrdHi) = manifestLines(dir, v)
+        val (want, wantOrdHi) = recomputed(dir, v, keys, nb, intKey = name == "int")
+        assert(got == want, s"$name v$v")
+        assert(gotOrdHi == wantOrdHi, s"$name v$v")
+      }
+      assert(!manifestLines(dir, 1L)._1.contains(emptied), s"$name: emptied bucket $emptied")
+    }
+  }
+
+  test("16 dirty groups spread evenly over the write tasks") {
+    val dir = tmpDir("graft_fg_even") + "/t"
+    FileGroups.commit(spark, dir,
+      (0L until 16000L).map(i => (i, i, "c", i.toDouble)).toDF("id", "lsn", "op", "value"),
+      0L, Seq("id"), Seq("lsn"), nBuckets = 16)
+    // every group dirty: one update per 100 keys
+    val batch = (0L until 16000L by 100L).map(i => (i, 100000L + i, "u", -1.0))
+      .toDF("id", "lsn", "op", "value")
+    val seen = graft.SparkProbe(spark) {
+      assert(FileGroups.commit(spark, dir, batch, 1L, Seq("id"), Seq("lsn")).size == 16)
+    }
+    val writes = seen.taskBytesWritten.values.filter(_.sum > 0)
+    assert(writes.size == 1, seen.taskBytesWritten)
+    val tasks = writes.head
+    val ratio = tasks.max / (tasks.sum.toDouble / tasks.size)
+    info(f"${tasks.size} write tasks, bytes ${tasks.mkString(", ")}, max/mean $ratio%.3f")
+    // a murmur3 hash of 16 buckets over 4 partitions lands 6/6/3/1
+    // groups per task (max/mean 1.5); dense placement lands 4/4/4/4
+    assert(ratio <= 1.25, tasks)
+    assert(FileGroups.read(spark, dir).get.count() == 16000L)
+  }
+
+  test("a Scala-door read of a 16-group table counts in at most 2 jobs") {
+    val dir = tmpDir("graft_fg_read2") + "/t"
+    FileGroups.commit(spark, dir,
+      (0L until 4000L).map(i => (i, i, "c", i.toDouble)).toDF("id", "lsn", "op", "value"),
+      0L, Seq("id"), Seq("lsn"), nBuckets = 16)
+    var n = 0L
+    val seen = graft.SparkProbe(spark) { n = FileGroups.read(spark, dir).get.count() }
+    info(s"${seen.jobs} jobs")
+    assert(n == 4000L)
+    assert(seen.jobs <= 2, seen.jobStages.mkString("\n"))
+  }
+
+  test("a lookup whose probes prune every group is a typed empty frame that reads no file") {
+    val dir = tmpDir("graft_fg_pruned") + "/t"
+    FileGroups.commit(spark, dir,
+      (0L until 200L).map(i => (i, i, "c", i.toDouble)).toDF("id", "lsn", "op", "value"),
+      0L, Seq("id"), Seq("lsn"), nBuckets = 8)
+    // far outside every group's [lo,hi]: the stats prune them all
+    val got = FileGroups.pointLookup(spark, dir, Seq("id"), Seq(1000000L)).get
+    assert(got.schema == FileGroups.read(spark, dir).get.schema)
+    val seen = graft.SparkProbe(spark)(assert(got.collect().isEmpty))
+    val scans = seen.nodes.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+    assert(scans.nonEmpty && scans.forall(_.relation.location.rootPaths.isEmpty),
+      seen.plans.map(_.treeString).mkString("\n"))
+  }
+
+  test("an empty first commit publishes a typed, empty version (no rows observed)") {
+    val dir = tmpDir("graft_fg_empty0") + "/t"
+    val empty = Seq.empty[(Long, Long, String, Double)].toDF("id", "lsn", "op", "value")
+    assert(FileGroups.commit(spark, dir, empty, 0L, Seq("id"), Seq("lsn"), nBuckets = 4).isEmpty)
+    assert(FileGroups.committedId(spark, dir).contains(0L))
+    assert(FileGroups.manifestEntries(spark, dir, 0L).isEmpty)
+    val got = FileGroups.read(spark, dir).get
+    assert(got.columns.toSeq == Seq("id", "lsn", "op", "value") && got.count() == 0L)
   }
 }

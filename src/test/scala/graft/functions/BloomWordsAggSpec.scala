@@ -3,11 +3,12 @@ package graft.functions
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** r21 commit-path fusion: [[BloomWordsAgg]] replaced the exploded
-  * (bucket, word) bit_or bloom build inside FileGroups.rewriteEntries.
-  * The manifest sketch is a pure OR of per-row bit positions, so the
-  * fused aggregate must produce BIT-IDENTICAL words to the historical
-  * exploded shape on the same keys — this spec pins that equivalence
+/** The file-group key bloom is built by [[FileGroupStatsAgg]] (one
+  * aggregate with the group stats, observed on the commit's write),
+  * which replaced the exploded (bucket, word) bit_or build. The manifest
+  * sketch is a pure OR of per-row bit positions, so the fused aggregate
+  * must produce BIT-IDENTICAL words to the historical exploded shape on
+  * the same keys, on any partitioning — this spec pins that equivalence
   * (probe behavior itself is pinned by FileGroupsSpec's lookup suite).
   */
 class BloomWordsAggSpec extends SparkSpec {
@@ -16,6 +17,7 @@ class BloomWordsAggSpec extends SparkSpec {
   private val BloomBits = 4096L
   private val Words = 64
   private val K = 3
+  private val Buckets = 7
 
   test("fused word aggregate is bit-identical to the exploded bit_or build") {
     val rows = (1L to 500L).map(i => (i % 7, s"key_$i")).toDF("b", "k")
@@ -36,23 +38,22 @@ class BloomWordsAggSpec extends SparkSpec {
         b -> arr.toSeq
       }
 
-    // fused shape: one grouped aggregation, words decoded from bytes
-    val fused = rows.groupBy(col("b"))
-      .agg(BloomWordsAgg.agg(posArr, Words).as("bloom"))
-      .collect().map { r =>
-        val bb = java.nio.ByteBuffer.wrap(r.getAs[Array[Byte]](1))
-        r.getLong(0) -> Seq.fill(Words)(bb.getLong)
-      }.toMap
+    // fused shape: one ungrouped aggregate, per-bucket words decoded
+    // from bytes
+    def blooms(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      df.agg(FileGroupStatsAgg.agg(col("b"), lit(null).cast("long"),
+          lit(null).cast("long"), posArr, Buckets, Words))
+        .head().getSeq[org.apache.spark.sql.Row](0).map { r =>
+          val bb = java.nio.ByteBuffer.wrap(r.getAs[Array[Byte]]("bloom"))
+          r.getAs[Long]("bucket") -> Seq.fill(Words)(bb.getLong)
+        }.toMap
+    val fused = blooms(rows)
 
     assert(fused.keySet == exploded.keySet && fused.nonEmpty)
     fused.foreach { case (b, words) => assert(words == exploded(b), s"bucket $b") }
     // and the sketch is partitioning-invariant (pure OR)
-    val one = rows.coalesce(1).groupBy(col("b"))
-      .agg(BloomWordsAgg.agg(posArr, Words).as("bloom"))
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    val many = rows.repartition(13, col("k")).groupBy(col("b"))
-      .agg(BloomWordsAgg.agg(posArr, Words).as("bloom"))
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(one == many)
+    val one = blooms(rows.coalesce(1))
+    val many = blooms(rows.repartition(13, col("k")))
+    assert(one == many && one == fused)
   }
 }

@@ -489,4 +489,79 @@ class FileGroupMergeSpec extends SparkSpec {
       (id, 10L + iterations, ((id % 2) * 1000 + iterations).toDouble))
     assert(got == want)
   }
+
+  /** A 20k-row, 16-group table behind catalog `cat`, and the text of a
+    * 100-row MERGE (50 matched updates, 50 inserts) into it — the shape
+    * of perfbench's serve statement. */
+  private def serveShaped(cat: String): (String, String) = {
+    val root = tmpDir("graft_fgmerge_serve")
+    FileGroups.commit(spark, root + "/emp",
+      (0L until 20000L).map(i => (i, i, "c", i.toDouble, s"name_$i"))
+        .toDF("id", "lsn", "op", "value", "name"),
+      0L, Seq("id"), Seq("lsn"), nBuckets = 16)
+    mkCatalog(cat, root)
+    val values = (0 until 100).map { i =>
+      val id = if (i % 2 == 0) i * 199L else 20000L + i
+      s"(${id}L, ${30000 + i}L, ${i}.5D, 'n$i')"
+    }.mkString(", ")
+    (root + "/emp",
+      s"""MERGE INTO $cat.emp t
+         |USING (SELECT * FROM VALUES $values AS s(id, lsn, value, name)) s
+         |ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET value = s.value, name = s.name, lsn = s.lsn, op = 'u'
+         |WHEN NOT MATCHED THEN INSERT (id, lsn, op, value, name)
+         |  VALUES (s.id, s.lsn, 'c', s.value, s.name)""".stripMargin)
+  }
+
+  test("a serve-shaped MERGE runs at most 6 jobs and caches one relation") {
+    val (t, merge) = serveShaped("graft_serve")
+    val seen = graft.SparkProbe(spark)(spark.sql(merge))
+    info(s"${seen.jobs} jobs, ${seen.cachedRelations} cached relation(s)")
+    assert(seen.jobs <= 6, seen.jobStages.mkString("\n"))
+    assert(seen.cachedRelations == 1, seen.plans.map(_.treeString).mkString("\n"))
+    assert(FileGroups.committedId(spark, t).contains(1L))
+    val got = spark.sql("SELECT count(*), sum(CASE WHEN op = 'u' THEN 1 ELSE 0 END) " +
+      "FROM graft_serve.emp").as[(Long, Long)].collect().toSeq
+    assert(got == Seq((20050L, 50L)))
+  }
+
+  test("a MERGE guard violation publishes nothing: no manifest, no marker, no data, head unmoved") {
+    val t = mkTable()
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def listing() = fs.listStatus(new org.apache.hadoop.fs.Path(t)).map(_.getPath.getName).toSet ++
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$t/files")).map(_.getPath.getName)
+    val before = listing()
+    val violations = Seq(
+      "cardinality" -> """MERGE INTO graft_cdc.emp t
+        |USING (SELECT * FROM VALUES (1L, 20L, 1.0D), (1L, 21L, 2.0D), (9L, 22L, 9.0D)
+        |  AS x(id, lsn, value)) s
+        |ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET value = s.value, lsn = s.lsn
+        |WHEN NOT MATCHED THEN INSERT (id, lsn, op, value) VALUES (s.id, s.lsn, 'c', s.value)""",
+      "ordering" -> """MERGE INTO graft_cdc.emp t
+        |USING (SELECT * FROM VALUES (2L, 1L), (3L, 99L) AS x(id, new_lsn)) s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET lsn = s.new_lsn, value = 9.9""",
+      // two matches of one target row are a violation even when no
+      // clause acts on them (the batch then holds match rows only)
+      "cardinality" -> """MERGE INTO graft_cdc.emp t
+        |USING (SELECT * FROM VALUES (1L, 5.0D), (1L, 6.0D) AS x(id, v)) s ON t.id = s.id
+        |WHEN MATCHED AND s.v > 100 THEN UPDATE SET value = s.v""")
+    violations.foreach { case (kind, sql) =>
+      val ex = intercept[Throwable](spark.sql(sql.stripMargin))
+      assert(chainMsg(ex).contains(kind), chainMsg(ex))
+      assert(listing() == before, s"$kind left ${listing() -- before}")
+      assert(FileGroups.committedId(spark, t).contains(0L))
+    }
+    assert(state() == Seq((1L, 10L, "c", 1.0), (2L, 11L, "c", 2.0), (3L, 12L, "u", 3.0)))
+    // without the duplicate, the same statement commits
+    spark.sql("""MERGE INTO graft_cdc.emp t
+      |USING (SELECT * FROM VALUES (1L, 20L, 1.0D), (9L, 22L, 9.0D) AS x(id, lsn, value)) s
+      |ON t.id = s.id
+      |WHEN MATCHED THEN UPDATE SET value = s.value, lsn = s.lsn
+      |WHEN NOT MATCHED THEN INSERT (id, lsn, op, value) VALUES (s.id, s.lsn, 'c', s.value)"""
+      .stripMargin)
+    assert(FileGroups.committedId(spark, t).contains(1L))
+    assert(state() == Seq((1L, 20L, "c", 1.0), (2L, 11L, "c", 2.0), (3L, 12L, "u", 3.0),
+      (9L, 22L, "c", 9.0)))
+  }
 }
